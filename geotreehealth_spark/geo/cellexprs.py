@@ -31,6 +31,9 @@ CELL_STRIDE = 1 << 22
 
 
 def _gxy(x: Column, y: Column, cell_size: float) -> tuple[Column, Column]:
+    # the kNN completeness proofs (operators/knn.py _dir_reach) derive each
+    # probe's searched box from these same grid coordinates: a change to the
+    # cell rule here changes both the cells joined and the reach proven
     gx = F.greatest(F.floor(x / F.lit(cell_size)), F.lit(0)).cast("long")
     gy = F.greatest(F.floor(y / F.lit(cell_size)), F.lit(0)).cast("long")
     return gx, gy

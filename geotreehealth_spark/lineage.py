@@ -8,9 +8,9 @@ incremental recompute, not Structured Streaming:
   `part_key` (e.g. coarse cell id or tile id);
 - alongside, a lineage table records (stage, part_key, input_fingerprint,
   row_count, wall_ms, completed_at_ns);
-- a restarted job anti-joins its input partitions against completed lineage
-  rows and recomputes ONLY missing/stale partitions, then unions with the
-  checkpointed output.
+- a restarted job anti-joins its input partitions against each partition's
+  latest lineage row and recomputes ONLY missing/stale partitions, then
+  unions with the checkpointed output.
 
 The input_fingerprint is a deterministic hash of the partition's input rows
 (xor-aggregated row hashes — order-independent), so a changed input partition
@@ -79,33 +79,44 @@ def run_stage(
     fps = partition_fingerprints(inputs, part_key)
     done = read_lineage(spark, base, stage)
     if done is not None:
+        # compare with each partition's LATEST lineage row only: an input
+        # that returns to an earlier fingerprint must recompute, since the
+        # stored output is the later input's
+        latest = done.groupBy(part_key).agg(
+            F.max(F.struct("completed_at_ns", "input_fingerprint", "input_rows")).alias("l")
+        ).select(part_key, "l.input_fingerprint", "l.input_rows")
         fresh = fps.join(
-            done.select(part_key, "input_fingerprint", "input_rows"),
-            [part_key, "input_fingerprint", "input_rows"],
-            "left_anti",
+            latest, [part_key, "input_fingerprint", "input_rows"], "left_anti"
         )
     else:
         fresh = fps
-    fresh_keys = [r[0] for r in fresh.select(part_key).collect()]
+    # read by the key collect, the subset, the output count and the lineage
+    # rows: without the cache each re-ran the input fingerprints and the
+    # latest-row agg
+    fresh = fresh.persist()
+    try:
+        fresh_keys = [r[0] for r in fresh.select(part_key).collect()]
 
-    if fresh_keys:
-        t0 = time.time()
-        subset = inputs.join(
-            F.broadcast(fresh.select(part_key)), part_key, "left_semi"
-        )
-        result = compute(subset)
-        cat.overwrite_partitions(result, stage, part_key)
-        wall_ms = int((time.time() - t0) * 1000)
-        out_now = cat.read(spark, stage).join(
-            F.broadcast(fresh.select(part_key)), part_key, "left_semi"
-        )
-        counts = out_now.groupBy(part_key).agg(F.count("*").alias("row_count"))
-        lineage_rows = (
-            fresh.join(counts, part_key, "left")
-            .withColumn("row_count", F.coalesce(F.col("row_count"), F.lit(0)))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("wall_ms", F.lit(wall_ms))
-            .withColumn("completed_at_ns", F.lit(time.time_ns()))
-        )
-        cat.append(lineage_rows, _lineage_table(stage))
+        if fresh_keys:
+            t0 = time.time()
+            subset = inputs.join(
+                F.broadcast(fresh.select(part_key)), part_key, "left_semi"
+            )
+            result = compute(subset)
+            cat.overwrite_partitions(result, stage, part_key)
+            wall_ms = int((time.time() - t0) * 1000)
+            out_now = cat.read(spark, stage).join(
+                F.broadcast(fresh.select(part_key)), part_key, "left_semi"
+            )
+            counts = out_now.groupBy(part_key).agg(F.count("*").alias("row_count"))
+            lineage_rows = (
+                fresh.join(counts, part_key, "left")
+                .withColumn("row_count", F.coalesce(F.col("row_count"), F.lit(0)))
+                .withColumn("stage", F.lit(stage))
+                .withColumn("wall_ms", F.lit(wall_ms))
+                .withColumn("completed_at_ns", F.lit(time.time_ns()))
+            )
+            cat.append(lineage_rows, _lineage_table(stage))
+    finally:
+        fresh.unpersist()
     return cat.read(spark, stage)

@@ -1,4 +1,4 @@
-"""Exact distributed kNN via Morton-cell candidate pruning (SURVEY.md J5/J6).
+"""Exact distributed kNN via grid-cell candidate pruning (SURVEY.md J5/J6).
 
 Reference semantics:
 - J5: per target point, euclidean distances to candidates, argsort, take k
@@ -7,20 +7,24 @@ Reference semantics:
   dropping candidates closer than ``remove_too_close`` = 3 m
   (batch_sam.py:427-460, 195-207; config.py:34).
 
-Physical plan (the north_star's "cell-local broadcast candidate pruning"):
-1. ring r: left points explode to their (2r+1)^2 ring cells → equi-join with
-   right points on cell_id → distance expression → window rank ≤ k.
-2. a left point is PROVEN complete when it found ≥ k candidates and its k-th
-   distance is < r*cell_size (the ring guarantees covering radius r*cell_size
-   around any point in the cell — anything closer is already a candidate), OR
-   when the ring box already covers the DATA BOUNDS (min/max of the right
-   side, one tiny agg) — the boundary-probe proof round 1 lacked: a probe at
-   the site edge has provably-empty space outside the bounds, so it no longer
-   escalates to the cross-join fallback (VERDICT.md "What's wrong" 3).
-3. survivors escalate with 4x ring radius; each escalation round handles an
-   exponentially-shrinking set, so total work stays near the ring-1 cost, and
-   rings reach data-bounds coverage in O(log(extent/cell)) rounds — the
-   cross-join fallback is retained only as a never-reached safety net.
+Both operators run one prove-or-escalate driver (`_prove_or_escalate`); they
+differ only in their cell sizing, their per-probe winners (one row per slot:
+`knn_rank` 1..k, or `quadrant`) and each slot's proof reach.
+1. ring r: unproven probes explode to their (2r+1)^2 ring cells → equi-join
+   with the cell-keyed candidate side on cell_id → distance expression →
+   winners per (probe, slot).
+2. a probe is PROVEN when every slot is settled: its winner lies strictly
+   inside the slot's reach — the distance the searched box is guaranteed to
+   cover in the slot's directions (`_dir_reach`) — or the box already covers
+   the candidate DATA BOUNDS (min/max of the right side, one tiny agg) in
+   those directions, so whatever was found is all there is.
+3. proven winners are re-attached to their full rows and, with the tagged
+   unproven residue, written by ONE localCheckpoint job; the residue count
+   then reads those blocks. The residue escalates with a 4x ring, and goes
+   to an exact crossJoin once residue x candidates is cheap, the ring spans
+   the site, or after four ring rounds. At forest density ring 1 proves
+   every probe, so a call costs the bounds agg, one checkpoint job and the
+   residue count.
 
 Why this scales: the join is a plain shuffle equi-join on int64 cell keys —
 AQE skew-splits hot cells — and the completeness proofs make the result EXACT
@@ -30,77 +34,71 @@ AQE skew-splits hot cells — and the completeness proofs make the result EXACT
 from __future__ import annotations
 
 import math
-import os
-import time
+from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geotreehealth_spark.geo import cellexprs
+from geotreehealth_spark.operators.components import _checkpoint_tracked
 from geotreehealth_spark.operators.pip_join import distance_expr
 
+# ring growth per escalation round
+ESCALATION = 4
+# ring rounds (rings 1, 4, 16, 64) before the residue goes to the crossJoin
+MAX_ROUNDS = 4
+# residue x candidate rows up to which the exact crossJoin beats another ring
+# round (r2: one straggler otherwise burns O(log extent) rounds; r4 raised it
+# from 50M after a 137 x 457k = 62M quadrant residue just missed the switch
+# and paid 2 extra barrier rounds) — ~0.5M distance rows/task at 128 tasks
+CROSS_JOIN_ROWS = 500_000_000
+# crossJoin task-count clamp: a 4-probe residue otherwise inherits the probe
+# side's partitioning and fans into ~96 near-empty tasks (measured ~3 s of
+# the sf0.1 quadrant call); ~2M distance rows per task is < 1 s of work.
+# The residue is repartitioned, not coalesced: its rows sit in the few
+# checkpoint partitions of the residue piece, and a coalesce left one task
+# with the whole crossJoin (a 319-probe x 30k-candidate residue on 4 cores:
+# 11 s vs 3.5 s)
+ROWS_PER_TASK = 2_000_000
+MAX_TASKS = 64
 
-def _trace(msg: str, t0: float) -> None:
-    if os.environ.get("SPARK_GRAFT_KNN_TRACE"):
-        print(f"[knn-trace] {msg}: {time.time() - t0:.2f}s", flush=True)
+QUADRANTS = ("NE", "SE", "NW", "SW")
 
 
 def _data_bounds(
-    right: DataFrame, rx: str, ry: str
+    right: DataFrame, rx: str, ry: str, right_id: str
 ) -> tuple[float, float, float, float, int] | None:
     """(xmin, xmax, ymin, ymax, count) of the candidate side — one agg job
-    shared by the coverage proofs AND the density-based cell sizing (fused so
-    auto-sized calls don't pay a separate count() scan).
-    Returns None when the candidate side is empty (ADVICE.md round 2: the
-    min/max come back NULL; callers short-circuit to an empty result instead
-    of crashing on float(None))."""
+    shared by the coverage proofs, the density-based cell sizing and the
+    right-id contract check. Returns None when the candidate side is empty
+    (the min/max come back NULL). Raises ValueError on a NULL right id."""
     b = right.agg(
         F.min(rx).alias("x0"), F.max(rx).alias("x1"),
         F.min(ry).alias("y0"), F.max(ry).alias("y1"),
         F.count("*").alias("n"),
+        F.count(F.when(F.col(right_id).isNull(), 1)).alias("null_ids"),
     ).first()
+    if b.null_ids:
+        raise ValueError(f"knn: {b.null_ids} candidate rows have a NULL {right_id!r}")
     if b.x0 is None:
         return None
     return float(b.x0), float(b.x1), float(b.y0), float(b.y1), int(b.n)
 
 
-def _with_cells(right: DataFrame, cell_size: float, rx: str, ry: str) -> DataFrame:
-    """Right side indexed by cell ONCE per kNN call (persisted by callers so
-    escalation rounds reuse it instead of re-scanning + re-encoding).
-    Cell key is a pure Catalyst expression (geo/cellexprs.py)."""
-    return right.withColumn(
-        "__cell", cellexprs.point_cell(F.col(rx), F.col(ry), cell_size)
-    )
-
-
-def _candidates(
-    left: DataFrame,
-    right_cells: DataFrame,
-    cell_size: float,
-    ring: int,
-    lx: str,
-    ly: str,
-    rx: str,
-    ry: str,
-) -> DataFrame:
-    lc = cellexprs.with_ring_cells(left, lx, ly, cell_size, ring)
-    return (
-        lc.join(right_cells, "__cell")
-        .drop("__cell")
-        .withColumn("dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry)))
-    )
-
-
 def _dir_reach(
+    probes: DataFrame,
     lx: str,
     ly: str,
     cell_size: float,
     ring: int,
     bounds: tuple[float, float, float, float],
-    exact: bool = True,
-) -> dict:
-    """Per-probe, per-direction guaranteed search reach of the ring-r box.
+) -> tuple[DataFrame, dict[str, Column]]:
+    """Per-probe, per-direction guaranteed search reach of the ring-r box,
+    as columns of `probes` (projected once, so the slots' proof conditions
+    reference them instead of each copying the whole expression), with a
+    {direction: column} map over them.
 
     The searched cells around a probe in cell (gx, gy) cover
     [(gx-r)*s, (gx+r+1)*s) x [(gy-r)*s, (gy+r+1)*s) — so the probe's
@@ -108,50 +106,33 @@ def _dir_reach(
     ``(gx+r+1)*s - x`` on the open high edge of each axis: always >= r*s,
     up to (r+1)*s. A direction whose DATA bound already lies within that
     reach constrains nothing (no candidate can exist beyond the bound), so
-    it contributes +inf. The completeness proofs take the min over the
-    directions a result could be displaced from; using the exact per-probe
-    reach instead of the conservative r*s constant proves strictly more
-    probes at ZERO candidate cost (r6 third session) — marginal probes no
-    longer pay the escalation rare path. Soundness: an unsearched candidate
-    in direction +x has fl(rx/s) > gx+r, hence rx >= (gx+r+1)*s, hence
-    dist >= reach_xp (the same one-ULP boundary class as the constant-rcs
-    proof and the cell join itself); low edges are closed, so the
-    bound-covered arms there use <= while the open high edges use <.
-    With ``exact=False`` every reach is the constant r*s and the arms use
-    <= (the pre-r6 proof, kept as the A/B / fallback escape hatch —
-    SPARK_GRAFT_KNN_CONSERVATIVE_PROOF=1).
+    it contributes +inf. Soundness: an unsearched candidate in direction +x
+    has fl(rx/s) > gx+r, hence rx >= (gx+r+1)*s, hence dist >= reach_xp;
+    low edges are closed, so the bound-covered arms there use <= while the
+    open high edges use <. gx/gy are the join's own cell coordinates
+    (cellexprs._gxy), so the proof and the searched cells cannot drift.
 
-    Proofs are performance-only: they decide which probes escalate, never
-    what a probe's winners are, so either setting yields identical results.
+    A proof only decides whether a probe escalates, but an unsound one
+    would keep a probe's incomplete winners: tests/test_knn_edge.py checks
+    both operators against a brute force on cell and bounds edges, +-1 ULP.
     """
     bx0, bx1, by0, by1 = bounds
-    s = float(cell_size)
+    s = F.lit(float(cell_size))
     x, y = F.col(lx), F.col(ly)
     inf = F.lit(float("inf"))
-    if not exact:
-        rcs = F.lit(float(ring * s))
-        return {
-            "xm": F.when(x - F.lit(bx0) <= rcs, inf).otherwise(rcs),
-            "xp": F.when(F.lit(bx1) - x <= rcs, inf).otherwise(rcs),
-            "ym": F.when(y - F.lit(by0) <= rcs, inf).otherwise(rcs),
-            "yp": F.when(F.lit(by1) - y <= rcs, inf).otherwise(rcs),
-        }
-    gx = F.greatest(F.floor(x / F.lit(s)), F.lit(0)).cast("double")
-    gy = F.greatest(F.floor(y / F.lit(s)), F.lit(0)).cast("double")
-    dxm = x - (gx - ring) * F.lit(s)
-    dxp = (gx + ring + 1) * F.lit(s) - x
-    dym = y - (gy - ring) * F.lit(s)
-    dyp = (gy + ring + 1) * F.lit(s) - y
-    return {
+    gx, gy = (g.cast("double") for g in cellexprs._gxy(x, y, cell_size))
+    dxm = x - (gx - ring) * s
+    dxp = (gx + ring + 1) * s - x
+    dym = y - (gy - ring) * s
+    dyp = (gy + ring + 1) * s - y
+    reach = {
         "xm": F.when(x - F.lit(bx0) <= dxm, inf).otherwise(dxm),
         "xp": F.when(F.lit(bx1) - x < dxp, inf).otherwise(dxp),
         "ym": F.when(y - F.lit(by0) <= dym, inf).otherwise(dym),
         "yp": F.when(F.lit(by1) - y < dyp, inf).otherwise(dyp),
     }
-
-
-def _proof_exact() -> bool:
-    return not os.environ.get("SPARK_GRAFT_KNN_CONSERVATIVE_PROOF")
+    out = probes.select("*", *[c.alias(f"__{d}") for d, c in reach.items()])
+    return out, {d: F.col(f"__{d}") for d in reach}
 
 
 def _cached(df: DataFrame) -> tuple[DataFrame, bool]:
@@ -161,6 +142,193 @@ def _cached(df: DataFrame) -> tuple[DataFrame, bool]:
     if df.storageLevel.useMemory or df.storageLevel.useDisk:
         return df, False
     return df.persist(), True
+
+
+def _argmin(cands: DataFrame, left_id: str, right_id: str, slot: str) -> DataFrame:
+    """Per (probe, slot), the (dist asc, right_id asc) first candidate.
+
+    Two-phase exact argmin instead of a rank window: min(dist) is a
+    fixed-width HashAggregate with map-side partial combine, so the shuffle
+    moves ~one row per group, not every candidate row (profiled at sf0.1:
+    the quadrant window's sort-exchange of 1.7M candidates was 6.3 s of a
+    12 s call). The struct-min tie-break takes the SortAggregate fallback,
+    but only over the min-dist matches; over all candidates it was measured
+    as slow as the window (r4). The candidates are recomputed for the second
+    phase, not persisted: re-running the cell join against the cached right
+    side beats caching the larger candidate set (r6 A/B at sf0.1: knn 2.63 s
+    vs 3.82 s, quadrant 8.6 s vs 9.9 s, every pass). The crossJoin fallback
+    too: for a k=1 residue of 319 x 30k rows (4 cores) it beat the window,
+    ~7.7 s vs ~9.9 s per call."""
+    keys = [left_id, slot]
+    m = cands.groupBy(*keys).agg(F.min("dist").alias("__md"))
+    return (
+        cands.join(m, keys)
+        .where(F.col("dist") == F.col("__md"))
+        .groupBy(*keys)
+        .agg(F.min(F.struct("dist", right_id)).alias("__w"))
+        .select(*keys, "__w.dist", f"__w.{right_id}")
+    )
+
+
+def _proven(
+    rem: DataFrame, win: DataFrame, left_id: str, slot: str, slots: tuple,
+    reach: list[Column],
+) -> DataFrame:
+    """Ids of the probes in `rem` whose winners are final: for every slot,
+    its reach is +inf (the searched box covers every candidate the slot
+    could hold, so whatever was found is all there is) or its winner lies
+    strictly inside the reach (nothing unsearched can displace it)."""
+    dists = win.groupBy(left_id).agg(*[
+        F.min(F.when(F.col(slot) == s, F.col("dist"))).alias(f"__d{i}")
+        for i, s in enumerate(slots)
+    ])
+    settled = [
+        (r == F.lit(float("inf"))) | F.coalesce(F.col(f"__d{i}") < r, F.lit(False))
+        for i, r in enumerate(reach)
+    ]
+    # probe-proportional sets join without a broadcast hint — AQE decides
+    return rem.join(dists, left_id, "left").where(reduce(Column.__and__, settled)).select(left_id)
+
+
+def _prove_or_escalate(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: str,
+    right_id: str,
+    left_xy: tuple[str, str],
+    right_xy: tuple[str, str],
+    extent: float,
+    min_dist: float | None,
+    cell_size: float | None,
+    auto_cell: Callable[[float], float],
+    slot: str,
+    slots: tuple,
+    winners: Callable[[DataFrame], DataFrame],
+    slot_reach: Callable[[dict[str, Column], tuple], list[Column]],
+) -> DataFrame:
+    """The prove-or-escalate loop behind knn_join and quadrant_knn_join.
+
+    auto_cell(density): the grid cell size when `cell_size` is None, from
+    the candidates per unit area.
+    winners(cands): candidate rows (left_id, lx, ly, right_id, rx, ry, dist)
+    -> winner rows (left_id, slot, dist, right_id), at most one per probe
+    and slot value in `slots`.
+    slot_reach(reach, bounds): per slot, in `slots` order, the distance
+    within which a winner is final, from `_dir_reach`'s per-direction
+    reach columns and the candidate data bounds.
+    Output: all left columns + right columns + dist + slot.
+    """
+    lx, ly = left_xy
+    rx, ry = right_xy
+    sc = left.sparkSession.sparkContext
+    # ONE scan of each side feeds the bounds agg, the cell-keyed join input,
+    # every round and the enrichment — profiling at sf0.1 showed each re-scan
+    # of a synthesized right side costs ~2.5 s
+    right_mat, right_owned = _cached(right)
+    left_mat, left_owned = _cached(left)
+    persisted = [df for df, own in ((right_mat, right_owned), (left_mat, left_owned)) if own]
+    blocks: list = []  # checkpoint RDDs: the result's storage, released on failure
+    # slim projections: candidates, winners and proofs move ONLY (id, x, y,
+    # dist); enrich() re-attaches the full rows to the ~|left|*slots winners
+    left_slim = left_mat.select(left_id, lx, ly)
+    right_slim = right_mat.select(right_id, rx, ry)
+
+    def candidates(rem: DataFrame, ring: int | None) -> DataFrame:
+        # ring None: the exact crossJoin (residue fallback, empty right side)
+        if ring is None:
+            c = rem.crossJoin(right_slim)
+        else:
+            c = cellexprs.with_ring_cells(rem, lx, ly, size, ring).join(right_cells, "__cell")
+        c = c.drop("__cell").withColumn(
+            "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
+        )
+        return c if min_dist is None else c.where(F.col("dist") >= min_dist)
+
+    def enrich(win: DataFrame) -> DataFrame:
+        # winners -> full output rows: AQE broadcasts the slim winner set and
+        # streams the cached left/right sides — no wide shuffles
+        return (
+            win.select(left_id, right_id, "dist", slot)
+            .join(left_mat, left_id)
+            .join(right_mat, right_id)
+            .select(*left.columns, *right.columns, "dist", slot)
+        )
+
+    def checkpoint(df: DataFrame) -> DataFrame:
+        # localCheckpoint blocks cannot be released through the DataFrame API
+        # (ADVICE r3); tracking their RDDs lets a failed call release them
+        out, created = _checkpoint_tracked(df, sc)
+        blocks.extend(created)
+        return out
+
+    try:
+        bounds = _data_bounds(right_mat, rx, ry, right_id)
+        if bounds is None:
+            # empty candidate side: the same plan over no candidates yields
+            # zero rows with the full output schema; limit(0) (read by
+            # candidates() at call time) lets Catalyst prune it without a job
+            right_slim = right_slim.limit(0)
+            return enrich(winners(candidates(left_slim, None)))
+        box, n_right = bounds[:4], bounds[4]
+        size = cell_size if cell_size is not None else auto_cell(n_right / (extent * extent))
+        right_cells = right_slim.withColumn(
+            "__cell", cellexprs.point_cell(F.col(rx), F.col(ry), size)
+        )
+        max_ring = max(int(math.ceil(extent / size)) + 1, 2)
+        goods: list[DataFrame] = []
+        rem, ring, n_rem = left_slim, 1, 0
+        for rnd in range(MAX_ROUNDS + 1):
+            # ring 1 always runs (max_ring >= 2); the residue of a later round
+            # goes to the crossJoin when that is cheap, when the ring spans
+            # the site, or after MAX_ROUNDS ring rounds
+            if rnd and (
+                rnd == MAX_ROUNDS or ring >= max_ring or n_rem * n_right <= CROSS_JOIN_ROWS
+            ):
+                parts = min(n_rem * n_right // ROWS_PER_TASK + 1, MAX_TASKS)
+                win = winners(candidates(rem.repartition(parts), None))
+                goods.append(checkpoint(enrich(win)))
+                break
+            win = winners(candidates(rem, ring)).persist()  # proof, good piece
+            persisted.append(win)
+            probes, reach = _dir_reach(rem, lx, ly, size, ring, box)
+            proven = _proven(probes, win, left_id, slot, slots, slot_reach(reach, box))
+            good = enrich(win.join(proven, left_id, "left_semi"))
+            # the unproven probes ride the same checkpoint as output-shaped
+            # rows tagged __residue, so deciding whether to escalate costs a
+            # block read, not another job
+            residue = rem.join(proven, left_id, "left_anti").select(*[
+                F.col(f.name) if f.name in (left_id, lx, ly)
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in good.schema.fields
+            ])
+            chk = checkpoint(
+                good.withColumn("__residue", F.lit(False)).unionByName(
+                    residue.withColumn("__residue", F.lit(True))
+                )
+            )
+            goods.append(chk.where(~F.col("__residue")).drop("__residue"))
+            rem = chk.where(F.col("__residue")).select(left_id, lx, ly)
+            # a NULL left id never matches the proofs' equi-joins, so it
+            # always lands here; checked in the residue read, not a new job
+            n_rem, null_ids = rem.agg(
+                F.count("*"), F.count(F.when(F.col(left_id).isNull(), 1))
+            ).first()
+            if null_ids:
+                raise ValueError(f"knn: {null_ids} probe rows have a NULL {left_id!r}")
+            if n_rem == 0:
+                break
+            ring *= ESCALATION
+        return reduce(DataFrame.unionByName, goods)
+    except BaseException:
+        # a failed call must not leak checkpoint blocks into a long-lived
+        # session (on success they ARE the result's storage)
+        for rdd in blocks:
+            rdd.unpersist()
+        raise
+    finally:
+        # the result reads only checkpoint blocks — the caches can go
+        for df in persisted:
+            df.unpersist()
 
 
 def knn_join(
@@ -174,323 +342,39 @@ def knn_join(
     right_xy: tuple[str, str] = ("cx", "cy"),
     extent: float = 1000.0,
     min_dist: float | None = None,
-    max_proof_rounds: int = 4,
-    prologue_rings: tuple[int, ...] = (1,),
 ) -> DataFrame:
     """Exact k nearest `right` rows per `left` row; ties broken by right_id.
 
     Output: all left columns + right columns + `dist` + `knn_rank` (1..k).
     CONTRACT: ``left_id`` / ``right_id`` must be non-null and unique per
     side — winners are re-attached to their full rows via equi-joins on
-    these ids (enrich()), so a NULL id silently drops its row and a
-    duplicated id multiplies its matches. (The r3 path carried full rows
-    through the ranking and would have surfaced such rows; the slim-id
-    rewrite trades that visibility for the narrow-shuffle plan.)
+    these ids, so a NULL id raises ValueError and a duplicated id multiplies
+    its matches.
     ``min_dist``: drop candidates strictly closer than this (reference's
     remove_too_close, batch_sam.py:430-432) before ranking.
-    ``max_proof_rounds``: ring-proof rounds before the residue goes to the
-    cross-join fallback. With the data-bounds coverage proof, rings reach
-    full coverage in O(log4(extent/cell)) rounds, so the fallback is a
-    safety net, not a planned phase.
     """
-    lx, ly = left_xy
-    rx, ry = right_xy
-    w = Window.partitionBy(left_id).orderBy(F.col("dist").asc(), F.col(right_id).asc())
-    # ONE scan of the candidate side feeds everything: the bounds/count agg,
-    # the cell-keyed join input (a cheap map over the cache), and the rare
-    # escalation path — profiling at sf0.1 showed each re-scan of a
-    # synthesized right side costs ~2.5 s, dominating kNN latency.
-    right_mat, right_owned = _cached(right)
-    bounds = _data_bounds(right_mat, rx, ry)
-    if bounds is None:
-        if right_owned:
-            right_mat.unpersist()
-        # empty candidate side: the crossJoin plan yields zero rows with the
-        # full output schema (left cols + right cols + dist + knn_rank)
-        empty = left.crossJoin(right.limit(0)).withColumn(
-            "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-        )
-        return empty.withColumn("knn_rank", F.row_number().over(w)).where(
-            F.col("knn_rank") <= k
-        )
-    bx0, bx1, by0, by1, n_right = bounds
-    bounds_box = (bx0, bx1, by0, by1)
-    if cell_size is None:
+
+    def auto_cell(density: float) -> float:
         # aim for ring-1 sufficiency: cell ~ 1.25x expected k-th radius under
         # uniform density (r3 used 2x; the tighter cell cuts the candidate
-        # join fan-out ~2.5x and escalation handles sparse regions exactly).
-        density = max(n_right, 1) / (extent * extent)
-        cell_size = max(min(1.25 * math.sqrt(k / density), extent / 2), extent / 4096)
-    # slim projections: the candidate explode/join/rank pipeline moves ONLY
-    # (id, x, y, dist) — full rows are re-attached to the ~|left|*k winners by
-    # one pair of joins inside the same job (r4: the r3 pipeline dragged all
-    # ~25 left+right columns through every exchange and persist).
-    left_mat, left_owned = _cached(left)
-    left_slim = left_mat.select(left_id, lx, ly)
-    right_slim = right_mat.select(right_id, rx, ry)
-    right_cells = _with_cells(right_slim, cell_size, rx, ry)
-    max_ring = max(int(math.ceil(extent / cell_size)) + 1, 2)
+        # join fan-out ~2.5x and escalation handles sparse regions exactly)
+        return max(min(1.25 * math.sqrt(k / density), extent / 2), extent / 4096)
 
-    scratch: list[DataFrame] = []
+    rank = Window.partitionBy(left_id).orderBy(F.col("dist").asc(), F.col(right_id).asc())
 
-    def ranked_for(rem: DataFrame, ring: int, final: bool) -> DataFrame:
-        if final:
-            # tiny-residue fallback: a direct cross join beats exploding a
-            # quarter-million ring cells per row (window path: the slim
-            # candidates are only computed once here)
-            cands = rem.crossJoin(right_slim).withColumn(
-                "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-            )
-        else:
-            cands = _candidates(rem, right_cells, cell_size, ring, lx, ly, rx, ry)
-        if min_dist is not None:
-            cands = cands.where(F.col("dist") >= min_dist)
-        if k == 1 and not final:
-            # two-phase exact argmin instead of a window: min(dist) is a
-            # fixed-width HashAggregate with map-side partial combine, so the
-            # shuffle moves ~|rem| group rows, not every candidate row (a
-            # min-over-struct agg would fall back to SortAggregate — measured
-            # as slow as the window it replaced); the equality join back is a
-            # broadcast of the tiny per-group minima, and the window ranks
-            # only the min-dist rows (exact right_id tie-break preserved).
-            # The candidate set is NOT persisted between the two phases (r6):
-            # both phases re-run the broadcast cell join against the cached
-            # right side, which is strictly cheaper than writing+reading the
-            # LARGER candidate set (fan-out x right rows) through the cache —
-            # interleaved A/B at sf0.1: knn 2.63 s vs 3.82 s, every pass.
-            m = cands.groupBy(left_id).agg(F.min("dist").alias("__md"))
-            matched = (
-                cands.join(m, left_id)
-                .where(F.col("dist") == F.col("__md"))
-                # a USING join moves the key column first — restore order
-                .select(left_id, lx, ly, right_id, rx, ry, "dist")
-            )
-            return matched.withColumn("knn_rank", F.row_number().over(w)).where(
-                F.col("knn_rank") <= 1
-            )
-        return cands.withColumn("knn_rank", F.row_number().over(w)).where(
+    def winners(cands: DataFrame) -> DataFrame:
+        if k == 1:
+            return _argmin(cands.withColumn("knn_rank", F.lit(1)), left_id, right_id, "knn_rank")
+        return cands.withColumn("knn_rank", F.row_number().over(rank)).where(
             F.col("knn_rank") <= k
         )
 
-    def proven_for(rem: DataFrame, ranked: DataFrame, ring: int) -> DataFrame:
-        # completeness proof (unified exact-reach form, _dir_reach): D = min
-        # over the four directions of the effective reach (+inf for
-        # bound-covered directions). D == inf -> the ring box covers every
-        # possible candidate, so whatever was found (even < k rows) is ALL
-        # there is (the old coverage arm); else a k-th neighbor strictly
-        # inside D proves nothing unsearched can displace the top-k (the old
-        # distance arm, with per-probe reach instead of the r*s constant).
-        # One left join replaces the old union+distinct exchange.
-        eff = _dir_reach(lx, ly, cell_size, ring, bounds_box, _proof_exact())
-        D = F.least(eff["xm"], eff["xp"], eff["ym"], eff["yp"])
-        kth = ranked.groupBy(left_id).agg(
-            F.max("dist").alias("__kth"), F.count("*").alias("__n")
-        )
-        return (
-            rem.join(kth, left_id, "left")
-            .where(
-                (D == F.lit(float("inf")))
-                | (
-                    (F.coalesce(F.col("__n"), F.lit(0)) >= k)
-                    & (F.col("__kth") < D)
-                )
-            )
-            .select(left_id)
-        )
-
-    def enrich(slim: DataFrame) -> DataFrame:
-        # winners -> full output rows: AQE broadcasts the slim winner set and
-        # streams the cached left/right sides — no wide shuffles
-        return (
-            slim.select(left_id, right_id, "dist", "knn_rank")
-            .join(left_mat, left_id)
-            .join(right_mat, right_id)
-            .select(*left.columns, *right.columns, "dist", "knn_rank")
-        )
-
-    def win1_for(rem: DataFrame, ring: int) -> DataFrame:
-        """r6 prologue fusion for k=1 (mirrors quadrant_knn_join's win_for):
-        one winner-struct row per probe — min(struct(dist, right_id)) over
-        the phase-1 minima matches IS the rank window's (dist asc, right_id
-        asc) rn=1 pick, and the k=1 distance proof is a projection of it, so
-        the window exchange and proven_for's kth aggregation both fold into
-        this tiny SortAggregate."""
-        cands = _candidates(rem, right_cells, cell_size, ring, lx, ly, rx, ry)
-        if min_dist is not None:
-            cands = cands.where(F.col("dist") >= min_dist)
-        m = cands.groupBy(left_id).agg(F.min("dist").alias("__md"))
-        matched = cands.join(m, left_id).where(F.col("dist") == F.col("__md"))
-        return matched.groupBy(left_id).agg(
-            F.min(F.struct("dist", right_id)).alias("__w")
-        )
-
-    def proven_from_win1(rem: DataFrame, win: DataFrame, ring: int) -> DataFrame:
-        # k=1: a winner row exists iff >= 1 candidate was found, so the
-        # count>=k arm of proven_for is implied and the k-th distance IS the
-        # winner's dist — same unified exact-reach proof as proven_for
-        eff = _dir_reach(lx, ly, cell_size, ring, bounds_box, _proof_exact())
-        D = F.least(eff["xm"], eff["xp"], eff["ym"], eff["yp"])
-        return (
-            rem.join(win, left_id, "left")
-            .where(
-                (D == F.lit(float("inf")))
-                | F.coalesce(F.col("__w")["dist"] < D, F.lit(False))
-            )
-            .select(left_id)
-        )
-
-    # --- fused prologue: the prologue_rings rounds composed into ONE job ---
-    # Default is a SINGLE ring-1 round: at forest density the ring-1 box
-    # already proves ~all probes, and the second (ring-4) round cost 5-7
-    # near-empty stages per call for a residue the escalation path handles
-    # anyway (A/B at sf0.1: knn 9.0->6.3 s, quadrant 16.5->13.2 s, identical
-    # rows). Pass (1, 4) for sparse/clustered data where ring-1 proves few.
-    # Round 2 (item 3 of VERDICT r3): the per-round count() driver barriers
-    # dominated kNN latency (2-3 full jobs per call). Here ring-1 and ring-4
-    # candidates, both proofs, the winner enrichment, and the leftover residue
-    # are one DAG whose single localCheckpoint job materializes everything;
-    # per-ring ranked rows and residues are persisted so the branches sharing
-    # them compute each subtree once WITHIN that job. The residue emerges as
-    # tagged rows of the same checkpoint, so deciding whether to escalate
-    # costs a block-read count, not another job. No broadcast hints on the
-    # probe-proportional proven-id sets (r3 item 2).
-    pieces: list[DataFrame] = []
-    prologue_cached: list[DataFrame] = []
-    rem = left_slim
-    last_ring, n_prologue = 1, 0
-    try:
-        for ring in (r for r in prologue_rings if r < max_ring):
-            if k == 1:
-                # r6 fusion — window + kth-proof agg folded into win1_for
-                win = win1_for(rem, ring).persist()
-                prologue_cached.append(win)
-                proven = proven_from_win1(rem, win, ring)
-                pieces.append(
-                    win.join(proven, left_id, "left_semi").select(
-                        left_id,
-                        F.col("__w")["dist"].alias("dist"),
-                        F.col("__w")[right_id].alias(right_id),
-                        F.lit(1).alias("knn_rank"),
-                    )
-                )
-            else:
-                ranked = ranked_for(rem, ring, final=False).persist()
-                prologue_cached.append(ranked)
-                proven = proven_for(rem, ranked, ring)
-                pieces.append(ranked.join(proven, left_id, "left_semi"))
-            rem = rem.join(proven, left_id, "left_anti").persist()
-            prologue_cached.append(rem)
-            last_ring, n_prologue = ring, n_prologue + 1
-        res_piece = rem.select(left_id).join(left_mat, left_id)
-        for f in right.schema.fields:
-            res_piece = res_piece.withColumn(f.name, F.lit(None).cast(f.dataType))
-        res_piece = (
-            res_piece.select(*left.columns, *right.columns)
-            .withColumn("dist", F.lit(None).cast("double"))
-            .withColumn("knn_rank", F.lit(-1))
-            .withColumn("__residue", F.lit(1))
-        )
-        if pieces:
-            good_slim = pieces[0]
-            for p in pieces[1:]:
-                good_slim = good_slim.unionByName(p)
-            enriched = enrich(good_slim).withColumn("__residue", F.lit(-1))
-            allp = enriched.unionByName(res_piece)
-        else:
-            # no prologue ring fit under max_ring (caller-tuned rings at a
-            # coarse cell size): every probe is residue, the escalation loop
-            # does all the work
-            allp = res_piece
-        # THE one job barrier for the common case; also the flat-lineage
-        # result handle. The checkpointed blocks themselves are NOT
-        # releasable through the DataFrame API (ADVICE r3) — long-lived
-        # sessions clear them via sparkContext getPersistentRDDs + unpersist,
-        # as bench.py's release_caches does between queries.
-        chk = allp.localCheckpoint(eager=True)
-    except BaseException:
-        # release the input caches too — a failed call must not leak the
-        # full cached candidate table into a long-lived session
-        if right_owned:
-            right_mat.unpersist()
-        if left_owned:
-            left_mat.unpersist()
-        raise
-    finally:
-        for df in prologue_cached + scratch:
-            df.unpersist()
-        scratch.clear()
-    good = chk.where(F.col("__residue") == -1).drop("__residue")
-    residue = chk.where(F.col("__residue") == 1).select(left_id, lx, ly)
-    t0 = time.time()
-    n_rem = residue.count()  # reads checkpointed blocks — not a recompute
-    _trace(f"knn residue count (n_rem={n_rem})", t0)
-    if n_rem == 0:
-        if right_owned:
-            right_mat.unpersist()
-        if left_owned:
-            left_mat.unpersist()
-        return good
-
-    # --- rare path: ring-16+ escalation loop on the tagged residue ---------
-    # (reuses the still-cached left/right sides — no re-scan)
-    # cost-based switch first: when residue x n_right distance rows are
-    # cheaper than another ring round, jump straight to the exact crossJoin
-    # (measured r2: one straggler otherwise burns O(log extent) rounds;
-    # threshold 500M slim distance rows ~ 0.5M/task at 128 tasks — r4 raised
-    # it from 50M after the quadrant residue, 137 x 457k = 62M, just missed
-    # the switch and paid 2 extra barrier rounds).
-    results = [good]
-    persisted: list[DataFrame] = (
-        ([right_mat] if right_owned else []) + ([left_mat] if left_owned else [])
+    # the k ranks share one reach: the k-th winner inside it proves all k
+    return _prove_or_escalate(
+        left, right, left_id, right_id, left_xy, right_xy, extent, min_dist,
+        cell_size, auto_cell, slot="knn_rank", slots=tuple(range(1, k + 1)), winners=winners,
+        slot_reach=lambda reach, _bounds: [F.least(*reach.values())] * k,
     )
-    remaining = residue
-    # escalation continues 4x from wherever the prologue stopped — with the
-    # default single-ring prologue that's ring 4, not a 16^2-cell explode
-    ring, rounds = 4 * last_ring, max(n_prologue, 1)
-    if n_rem * max(n_right, 1) <= 500_000_000:
-        rounds = max_proof_rounds
-    try:
-        while True:
-            final = ring >= max_ring or rounds >= max_proof_rounds
-            if final:
-                # task-count clamp: a 4-probe residue otherwise inherits the
-                # probe side's partitioning and fans the crossJoin into ~96
-                # near-empty tasks across 2 stages (measured ~3 s of the
-                # sf0.1 quadrant call); ~2M distance rows per task is < 1 s
-                # of real work each
-                parts = max(1, min(n_rem * max(n_right, 1) // 2_000_000 + 1, 64))
-                remaining = remaining.coalesce(int(parts))
-            ranked = ranked_for(remaining, ring, final)
-            if final:
-                results.append(enrich(ranked))
-                break
-            ranked = ranked.persist()  # reused by proof, semi-join, and union
-            persisted.append(ranked)
-            proven = proven_for(remaining, ranked, ring)
-            results.append(enrich(ranked.join(proven, left_id, "left_semi")))
-            remaining = remaining.join(proven, left_id, "left_anti").persist()
-            persisted.append(remaining)
-            n_rem = remaining.count()
-            if n_rem == 0:
-                break
-            if n_rem * max(n_right, 1) <= 500_000_000:
-                rounds = max_proof_rounds  # next iteration takes final branch
-            else:
-                rounds += 1
-            ring *= 4
-        # checkpoint ONLY the rare-path pieces (they read `persisted` caches
-        # released below) — `good` is already backed by the prologue's
-        # checkpoint blocks; re-materializing it through a second checkpoint
-        # doubled the result write for a handful of residue probes
-        if len(results) == 1:  # guard the loop invariant (ADVICE r5)
-            return results[0]
-        extra = results[1]
-        for r in results[2:]:
-            extra = extra.unionByName(r)
-        return results[0].unionByName(extra.localCheckpoint(eager=True))
-    finally:
-        for df in persisted + scratch:
-            df.unpersist()
 
 
 def quadrant_knn_join(
@@ -503,8 +387,6 @@ def quadrant_knn_join(
     right_xy: tuple[str, str] = ("cx", "cy"),
     extent: float = 1000.0,
     min_dist: float = 3.0,
-    max_proof_rounds: int = 4,
-    prologue_rings: tuple[int, ...] = (1,),
 ) -> DataFrame:
     """J6: nearest `right` per cardinal quadrant around each `left` point.
 
@@ -516,348 +398,58 @@ def quadrant_knn_join(
     SQL oracle encodes the engine's convention (ADVICE.md round 1 asked for
     the docstring to say so). Candidates with dist < min_dist are dropped
     first (batch_sam.py:430-432, config.py:34). Output: left/right columns +
-    quadrant + dist (one row per non-empty quadrant, ≤ 4 per left point).
+    dist + quadrant (one row per non-empty quadrant, ≤ 4 per left point).
     CONTRACT: ``left_id`` / ``right_id`` non-null and unique per side — same
-    enrich()-by-equi-join re-attachment as knn_join, same silent row loss /
-    multiplication on violation.
+    re-attachment by equi-join as knn_join, same ValueError on a NULL id and
+    row multiplication on a duplicate.
 
-    Completeness proof per (left, quadrant): found-best dist < ring radius,
-    OR the quadrant's intersection with the candidate DATA BOUNDS is fully
-    covered by the ring box — the extent-clipped proof that lets boundary
-    probes (whose outward quadrants are provably empty) finish without the
-    round-1 full cross-join fallback (VERDICT.md "What's wrong" 3).
+    Completeness proof per (left, quadrant): found-best dist < the reach of
+    the quadrant's two directions, OR the quadrant's intersection with the
+    candidate DATA BOUNDS is covered by the ring box or empty.
     """
     lx, ly = left_xy
     rx, ry = right_xy
-
+    east, north = F.col(rx) >= F.col(lx), F.col(ry) >= F.col(ly)
     quadrant = (
-        F.when((F.col(rx) >= F.col(lx)) & (F.col(ry) >= F.col(ly)), F.lit("NE"))
-        .when((F.col(rx) >= F.col(lx)) & (F.col(ry) < F.col(ly)), F.lit("SE"))
-        .when((F.col(rx) < F.col(lx)) & (F.col(ry) >= F.col(ly)), F.lit("NW"))
-        .otherwise(F.lit("SW"))
+        F.when(east & north, F.lit("NE")).when(east, F.lit("SE"))
+        .when(north, F.lit("NW")).otherwise(F.lit("SW"))
     )
-    w = Window.partitionBy(left_id, "quadrant").orderBy(
-        F.col("dist").asc(), F.col(right_id).asc()
-    )
-    # one scan of the candidate side for bounds + cells + rare path — see
-    # knn_join
-    right_mat, right_owned = _cached(right)
-    bounds = _data_bounds(right_mat, rx, ry)
-    if bounds is None:
-        if right_owned:
-            right_mat.unpersist()
-        empty = left.crossJoin(right.limit(0)).withColumn(
-            "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-        )
-        empty = empty.where(F.col("dist") >= min_dist).withColumn("quadrant", quadrant)
-        return empty.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") == 1
-        ).drop("__rn")
-    bx0, bx1, by0, by1, n_right = bounds
-    bounds_box = (bx0, bx1, by0, by1)
-    if cell_size is None:
-        density = max(n_right, 1) / (extent * extent)
-        # 6x mean spacing (r6 third session, down from 8x): the binding
-        # constraint is PROOF coverage, not fan-out — at r4's 4x a handful of
-        # probes fail the ring-1 quadrant proof and pay a 4-5 s escalation
-        # round, and before the exact-reach proofs 8x was needed for full
-        # ring-1 coverage (A/B: 8x+ring1 14.6 s vs 4x+ring2 15.9 vs 4x+ring1
-        # ~16-20 s). With the exact per-probe reach + empty-quadrant arms
-        # (_dir_reach/_quad_reach) the ring-1 proof reaches 1-2 cells per
-        # direction, so the cell can shrink to 6x — ~0.56x the candidate
-        # fan-out — while the residue stays 0; at 5x the residue returns.
-        # Interleaved min-of-3 A/B at sf0.1: 6x 6.23 s vs 8x 7.39 vs 5x
-        # 7.29; 6x won every pass, identical output rows.
-        cell_size = max(min(6.0 * math.sqrt(1.0 / density), extent / 2), extent / 1024)
-    # slim pipeline + winner enrichment — see knn_join
-    left_mat, left_owned = _cached(left)
-    left_slim = left_mat.select(left_id, lx, ly)
-    right_slim = right_mat.select(right_id, rx, ry)
-    right_cells = _with_cells(right_slim, cell_size, rx, ry)
-    max_ring = max(int(math.ceil(extent / cell_size)) + 1, 2)
-    quads = ("NE", "SE", "NW", "SW")
 
-    scratch: list[DataFrame] = []
+    def auto_cell(density: float) -> float:
+        # 6x mean spacing: the binding constraint is PROOF coverage, not
+        # fan-out. With the exact per-probe reach and the empty-quadrant arms
+        # the ring-1 proof reaches 1-2 cells per direction, so the cell can be
+        # 6x — ~0.56x the candidate fan-out of 8x — while the residue stays 0;
+        # at 5x the residue returns. Interleaved min-of-3 A/B at sf0.1 (r6):
+        # 6x 6.23 s vs 8x 7.39 vs 5x 7.29; 6x won every pass, same rows.
+        return max(min(6.0 * math.sqrt(1.0 / density), extent / 2), extent / 1024)
 
-    def best_for(
-        rem: DataFrame, ring: int, final: bool, small_final: bool = True
-    ) -> DataFrame:
-        if final:
-            # safety net only: with coverage proofs every probe is provable
-            # once the ring covers the data bounds (slim candidates are only
-            # computed once here; same two-phase argmin as the ring path —
-            # the full-window sort over |residue| x |right| crossJoin rows
-            # was ~3 s for FOUR residue probes at sf0.1)
-            cands = rem.crossJoin(right_slim).withColumn(
-                "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-            )
-        else:
-            cands = _candidates(rem, right_cells, cell_size, ring, lx, ly, rx, ry)
-        cands = cands.where(F.col("dist") >= min_dist).withColumn("quadrant", quadrant)
-        if final and not small_final:
-            # big-residue final: the two-phase argmin persists the candidate
-            # set for its second scan — up to the 500M-row cost switch that
-            # is multi-GB of cache, so stream a single window pass instead
-            # (review r5)
-            return cands.withColumn("__rn", F.row_number().over(w)).where(
-                F.col("__rn") == 1
-            ).drop("__rn")
-        # two-phase exact argmin per (probe, quadrant) instead of a window:
-        # min(dist) is a fixed-width HashAggregate with map-side partial
-        # combine, so the shuffle moves ~|rem|x4 group rows instead of every
-        # candidate row (profiled at sf0.1: the window sort-exchange of 1.7M
-        # candidates was 6.3 s of a 12 s call; a min-over-struct agg falls
-        # back to SortAggregate and is just as slow). The equality join back
-        # broadcasts the tiny minima, and the window ranks only the min-dist
-        # rows — the exact (dist asc, right_id asc) tie-break is preserved.
-        # No persist between the phases (r6): recomputing the broadcast cell
-        # join from the cached right side beats caching the larger candidate
-        # set (A/B: quadrant 8.6 s vs 9.9 s min-of-3, every pass) — see
-        # knn_join's ranked_for.
-        m = cands.groupBy(left_id, "quadrant").agg(F.min("dist").alias("__md"))
-        matched = (
-            cands.join(m, [left_id, "quadrant"])
-            .where(F.col("dist") == F.col("__md"))
-            # a USING join moves the key columns first — restore order
-            .select(left_id, lx, ly, right_id, rx, ry, "dist", "quadrant")
-        )
-        return matched.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") == 1
-        ).drop("__rn")
+    def winners(cands: DataFrame) -> DataFrame:
+        return _argmin(cands.withColumn("quadrant", quadrant), left_id, right_id, "quadrant")
 
-    def _quad_reach(ring: int) -> dict:
-        # per-quadrant effective proof radius: min of the quadrant's two
-        # direction reaches (_dir_reach; +inf for bound-covered directions).
-        # D_q == inf -> the quadrant's region ∩ data bounds sits entirely
-        # inside the searched box (the old _coverage arm); else a winner
-        # strictly inside D_q proves nothing unsearched in that quadrant can
-        # beat it (the old dist<rcs arm, with per-probe reach).
-        #
-        # Third arm (r6 third session): a quadrant whose defining half-plane
-        # is IMPOSSIBLE given the data bounds is provably empty — e.g. the
-        # west quadrants need a candidate with cx < px, which cannot exist
-        # when px <= bx0 (every candidate has cx >= bx0). The old two-arm
-        # proof required BOTH of a quadrant's directions to be bounds-covered
-        # and so never proved e.g. the corner probe at the site origin, whose
-        # three outward quadrants are empty but unbounded along one axis —
-        # the ONE residue probe at sf0.1 that paid the whole escalation rare
-        # path (~1.3-2.3 s/call). West/south arms are strict half-planes
-        # (cx < px), east/north inclusive (cx >= px), mirroring the quadrant
-        # definition exactly.
-        eff = _dir_reach(lx, ly, cell_size, ring, bounds_box, _proof_exact())
-        inf = F.lit(float("inf"))
+    def slot_reach(reach: dict[str, Column], bounds: tuple) -> list[Column]:
+        # a quadrant's reach is the min of its two directions' reaches (+inf
+        # where the ring box covers the data bounds). Third arm: a quadrant
+        # whose half-plane lies outside the data bounds is provably empty —
+        # e.g. the west quadrants need cx < px, impossible when px <= bx0.
+        # Without it the corner probe at the site origin, whose outward
+        # quadrants are empty but unbounded along one axis, paid the whole
+        # escalation path (r6: the one residue probe at sf0.1). West/south
+        # are strict half-planes (cx < px), east/north inclusive (cx >= px),
+        # mirroring `quadrant` exactly.
+        bx0, bx1, by0, by1 = bounds
         x, y = F.col(lx), F.col(ly)
-        if _proof_exact():
-            no_w = x <= F.lit(bx0)  # no candidate strictly west of the probe
-            no_e = x > F.lit(bx1)  # no candidate at-or-east of the probe
-            no_s = y <= F.lit(by0)
-            no_n = y > F.lit(by1)
-        else:
-            no_w = no_e = no_s = no_n = F.lit(False)
-        return {
-            "NE": F.when(no_e | no_n, inf).otherwise(F.least(eff["xp"], eff["yp"])),
-            "SE": F.when(no_e | no_s, inf).otherwise(F.least(eff["xp"], eff["ym"])),
-            "NW": F.when(no_w | no_n, inf).otherwise(F.least(eff["xm"], eff["yp"])),
-            "SW": F.when(no_w | no_s, inf).otherwise(F.least(eff["xm"], eff["ym"])),
-        }
+        no_w, no_e, no_s, no_n = x <= bx0, x > bx1, y <= by0, y > by1
+        inf = F.lit(float("inf"))
+        return [
+            F.when(no_e | no_n, inf).otherwise(F.least(reach["xp"], reach["yp"])),
+            F.when(no_e | no_s, inf).otherwise(F.least(reach["xp"], reach["ym"])),
+            F.when(no_w | no_n, inf).otherwise(F.least(reach["xm"], reach["yp"])),
+            F.when(no_w | no_s, inf).otherwise(F.least(reach["xm"], reach["ym"])),
+        ]
 
-    def proven_for(rem: DataFrame, best: DataFrame, ring: int) -> DataFrame:
-        # per-(left, quadrant) winner distances, pivoted to 4 columns (the
-        # old flag pivot baked the conservative rcs into the aggregation;
-        # carrying the dist lets the exact-reach condition run per probe)
-        dists = best.groupBy(left_id).agg(
-            *[
-                F.min(F.when(F.col("quadrant") == q, F.col("dist"))).alias(f"__d_{q}")
-                for q in quads
-            ]
-        )
-        Dq = _quad_reach(ring)
-        # probe-proportional sets join without a broadcast hint — AQE decides
-        complete = rem.select(left_id, lx, ly).join(dists, left_id, "left")
-        for q in quads:
-            complete = complete.where(
-                (Dq[q] == F.lit(float("inf")))
-                | F.coalesce(F.col(f"__d_{q}") < Dq[q], F.lit(False))
-            )
-        return complete.select(left_id)
-
-    def win_for(rem: DataFrame, ring: int) -> DataFrame:
-        """r6 prologue fusion: ONE row per probe with a per-quadrant winner
-        struct — min(struct(dist, right_id)) over the min-dist rows IS the
-        rank window's (dist asc, right_id asc) rn=1 pick, and the proof flag
-        is a projection of the winner's dist, so the rank-window exchange AND
-        proven_for's flag pivot collapse into this one tiny aggregation. The
-        struct-min takes the SortAggregate fallback, but its input is only
-        the phase-1 minima matches (~4 rows/probe); the full-candidate
-        struct-min that was measured window-slow in r4 stays rejected."""
-        cands = _candidates(rem, right_cells, cell_size, ring, lx, ly, rx, ry)
-        cands = cands.where(F.col("dist") >= min_dist).withColumn("quadrant", quadrant)
-        m = cands.groupBy(left_id, "quadrant").agg(F.min("dist").alias("__md"))
-        matched = cands.join(m, [left_id, "quadrant"]).where(
-            F.col("dist") == F.col("__md")
-        )
-        return matched.groupBy(left_id).agg(
-            *[
-                F.min(
-                    F.when(F.col("quadrant") == q, F.struct("dist", right_id))
-                ).alias(f"__w_{q}")
-                for q in quads
-            ]
-        )
-
-    def proven_from_win(rem: DataFrame, win: DataFrame, ring: int) -> DataFrame:
-        Dq = _quad_reach(ring)
-        complete = rem.select(left_id, lx, ly).join(win, left_id, "left")
-        for q in quads:
-            complete = complete.where(
-                (Dq[q] == F.lit(float("inf")))
-                | F.coalesce(F.col(f"__w_{q}")["dist"] < Dq[q], F.lit(False))
-            )
-        return complete.select(left_id)
-
-    def explode_win(win: DataFrame) -> DataFrame:
-        # wide winner row -> one (left_id, dist, right_id, quadrant) row per
-        # non-empty quadrant, the shape enrich() reads
-        e = win.select(
-            left_id,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(q).alias("quadrant"), F.col(f"__w_{q}").alias("w")
-                        )
-                        for q in quads
-                    ]
-                )
-            ).alias("e"),
-        ).where(F.col("e.w").isNotNull())
-        return e.select(
-            left_id,
-            F.col("e.w.dist").alias("dist"),
-            F.col(f"e.w.{right_id}").alias(right_id),
-            F.col("e.quadrant").alias("quadrant"),
-        )
-
-    def enrich(slim: DataFrame) -> DataFrame:
-        # winners -> full output rows — see knn_join
-        return (
-            slim.select(left_id, right_id, "dist", "quadrant")
-            .join(left_mat, left_id)
-            .join(right_mat, right_id)
-            .select(*left.columns, *right.columns, "dist", "quadrant")
-        )
-
-    # fused ring-1 + ring-4 prologue, one checkpoint job — see knn_join.
-    # r6 fusion: the per-ring unit is win_for's one-row-per-probe winner
-    # table — rank window + flag pivot fused into its struct-min agg; the
-    # escalation loop below keeps the best_for/proven_for machinery.
-    pieces: list[DataFrame] = []
-    prologue_cached: list[DataFrame] = []
-    rem = left_slim
-    last_ring, n_prologue = 1, 0
-    try:
-        for ring in (r for r in prologue_rings if r < max_ring):
-            win = win_for(rem, ring).persist()
-            prologue_cached.append(win)
-            proven = proven_from_win(rem, win, ring)
-            pieces.append(explode_win(win.join(proven, left_id, "left_semi")))
-            rem = rem.join(proven, left_id, "left_anti").persist()
-            prologue_cached.append(rem)
-            last_ring, n_prologue = ring, n_prologue + 1
-        res_piece = rem.select(left_id).join(left_mat, left_id)
-        for f in right.schema.fields:
-            res_piece = res_piece.withColumn(f.name, F.lit(None).cast(f.dataType))
-        res_piece = (
-            res_piece.select(*left.columns, *right.columns)
-            .withColumn("dist", F.lit(None).cast("double"))
-            .withColumn("quadrant", F.lit(None).cast("string"))
-            .withColumn("__residue", F.lit(1))
-        )
-        if pieces:
-            good_slim = pieces[0]
-            for p in pieces[1:]:
-                good_slim = good_slim.unionByName(p)
-            enriched = enrich(good_slim).withColumn("__residue", F.lit(-1))
-            allp = enriched.unionByName(res_piece)
-        else:
-            # no prologue ring fit under max_ring — see knn_join
-            allp = res_piece
-        t0 = time.time()
-        chk = allp.localCheckpoint(eager=True)
-        _trace("quadrant prologue checkpoint", t0)
-    except BaseException:
-        if right_owned:
-            right_mat.unpersist()
-        if left_owned:
-            left_mat.unpersist()
-        raise
-    finally:
-        for df in prologue_cached + scratch:
-            df.unpersist()
-        scratch.clear()
-    good = chk.where(F.col("__residue") == -1).drop("__residue")
-    residue = chk.where(F.col("__residue") == 1).select(left_id, lx, ly)
-    t0 = time.time()
-    n_rem = residue.count()  # reads checkpointed blocks — not a recompute
-    _trace(f"quadrant residue count (n_rem={n_rem})", t0)
-    if n_rem == 0:
-        if right_owned:
-            right_mat.unpersist()
-        if left_owned:
-            left_mat.unpersist()
-        return good
-
-    # rare path: ring-16+ escalation on the residue, reusing the cached
-    # left/right sides (see knn_join)
-    results = [good]
-    persisted: list[DataFrame] = (
-        ([right_mat] if right_owned else []) + ([left_mat] if left_owned else [])
+    return _prove_or_escalate(
+        left, right, left_id, right_id, left_xy, right_xy, extent, min_dist,
+        cell_size, auto_cell, slot="quadrant", slots=QUADRANTS, winners=winners,
+        slot_reach=slot_reach,
     )
-    remaining = residue
-    # escalate 4x from wherever the prologue stopped — see knn_join
-    ring, rounds = 4 * last_ring, max(n_prologue, 1)
-    if n_rem * max(n_right, 1) <= 500_000_000:
-        rounds = max_proof_rounds
-    try:
-        while True:
-            final = ring >= max_ring or rounds >= max_proof_rounds
-            if final:
-                # task-count clamp for tiny residues — see knn_join
-                parts = max(1, min(n_rem * max(n_right, 1) // 2_000_000 + 1, 64))
-                remaining = remaining.coalesce(int(parts))
-            best = best_for(
-                remaining, ring, final,
-                small_final=n_rem * max(n_right, 1) <= 50_000_000,
-            )
-            if final:
-                results.append(enrich(best))
-                break
-            best = best.persist()  # reused by proof, semi-join, and union
-            persisted.append(best)
-            proven = proven_for(remaining, best, ring)
-            results.append(enrich(best.join(proven, left_id, "left_semi")))
-            remaining = remaining.join(proven, left_id, "left_anti").persist()
-            persisted.append(remaining)
-            n_rem = remaining.count()
-            if n_rem == 0:
-                break
-            if n_rem * max(n_right, 1) <= 500_000_000:
-                rounds = max_proof_rounds
-            else:
-                rounds += 1
-            ring *= 4
-        # checkpoint only the rare-path pieces — `good` already reads the
-        # prologue's checkpoint blocks; flat-lineage, leak-free result
-        # (ADVICE.md round 2) — see knn_join
-        if len(results) == 1:  # guard the loop invariant (ADVICE r5)
-            return results[0]
-        extra = results[1]
-        for r in results[2:]:
-            extra = extra.unionByName(r)
-        t0 = time.time()
-        extra = extra.localCheckpoint(eager=True)
-        _trace("quadrant rare-path final checkpoint", t0)
-        return results[0].unionByName(extra)
-    finally:
-        for df in persisted + scratch:
-            df.unpersist()

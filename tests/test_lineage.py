@@ -67,3 +67,20 @@ def test_duplicate_row_count_change_detected(spark, tmp_path):
     out2 = lineage.run_stage(spark, "dup", three, "part_key", compute, base)
     assert len(calls) == 2
     assert out2.collect()[0].n == 3
+
+
+def test_input_returning_to_earlier_fingerprint_recomputes(spark, tmp_path):
+    """Inputs v = 1, 5, 1: the third run's fingerprint matches the FIRST
+    run's lineage row, but the stored output is the second run's, so the
+    partition must recompute (staleness is judged on the latest row only)."""
+    base = str(tmp_path / "ckpt3")
+
+    def compute(df):
+        return df.withColumn("out", F.col("v") * 2)
+
+    outs = []
+    for v in (1, 5, 1):
+        inp = spark.createDataFrame([("p", v)], "part_key string, v int")
+        out = lineage.run_stage(spark, "revert", inp, "part_key", compute, base)
+        outs.append(out.collect()[0].out)
+    assert outs == [2, 10, 2]
