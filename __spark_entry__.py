@@ -590,7 +590,7 @@ def q_weighted_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = nms.weighted_nms(
         polys, id_col="crown_id", priority_col="priority", threshold=0.5,
-        cell_size=10.0, criterion="iou",
+        cell_size=10.0,
     )
     return out.select("crown_id", "wscore", "selected")
 
@@ -1656,8 +1656,7 @@ def _nms_oracle() -> str:
 
     polys = synth.oracle_with(("crowns", V["crowns"])) + NMS_SUBSET_SQL
     return greedy_nms_box_oracle_sql(
-        polys, id_col="crown_id", score_col="score", threshold=0.3,
-        criterion="overlap_ratio", rounds=40,
+        polys, id_col="crown_id", score_col="score", threshold=0.3, rounds=40,
     )
 
 
@@ -1669,8 +1668,7 @@ def _weighted_nms_oracle() -> str:
         + WNMS_SUBSET_SQL
     )
     return weighted_nms_box_oracle_sql(
-        polys, id_col="crown_id", priority_col="priority", threshold=0.5,
-        criterion="iou", rounds=40,
+        polys, id_col="crown_id", priority_col="priority", threshold=0.5, rounds=40,
     )
 
 

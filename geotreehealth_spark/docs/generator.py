@@ -54,14 +54,6 @@ def crown_polygon_ring(key: int, cx: float, cy: float, radius: float) -> np.ndar
     return kernels.convex_hull(pts)
 
 
-@F.pandas_udf(BinaryType())
-def crown_wkb_udf(key: pd.Series, cx: pd.Series, cy: pd.Series, radius: pd.Series) -> pd.Series:
-    out = []
-    for k, x, y, r in zip(key, cx, cy, radius):
-        out.append(wkb.encode_polygon(crown_polygon_ring(int(k), float(x), float(y), float(r))))
-    return pd.Series(out)
-
-
 # one combined UDF: polygon WKB + bounds in a single pass, so Catalyst cannot
 # inline-and-recompute the expensive polygon build once per derived column
 _CROWN_GEO_TYPE = StructType(
@@ -261,13 +253,4 @@ def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
                 2,
             ),
         ).alias("spans"),
-    )
-
-
-def build_docs(stems: DataFrame, crowns_geo: DataFrame, tiles: DataFrame) -> DataFrame:
-    """The one physical input table: union of all entity docs."""
-    return (
-        stems_to_docs(stems)
-        .unionByName(crowns_to_docs(crowns_geo))
-        .unionByName(tiles_to_docs(tiles))
     )

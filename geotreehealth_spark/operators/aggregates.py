@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from geotreehealth_spark.operators.materialize import cached
+
 
 def first_by_order(df: DataFrame, key: str, order_cols: list) -> DataFrame:
     """A1: per key, first row under the given explicit total order."""
@@ -34,9 +36,7 @@ def median_pick(
     same partitioning reused by Catalyst). r6: the input lineage feeds both
     the median derivation and the final pick join — persist it once.
     """
-    from geotreehealth_spark.operators.knn import _cached
-
-    df, _ = _cached(df)
+    df = cached(df)
     w_order = Window.partitionBy(key).orderBy(F.col(value).asc(), F.col(id_col).asc())
     w_all = Window.partitionBy(key)
     ranked = df.withColumn("__rn", F.row_number().over(w_order)).withColumn(

@@ -15,7 +15,9 @@ localCheckpoint per round so lineage stays flat across iterations. Rounds
 needed = graph diameter; near-dup graphs are clique-ish (diameter 2-4), so
 the loop is short — and each round's cost is O(|E|) shuffled longs, which
 scales to billions of edges. The component id IS the canonical keeper
-(min doc id reachable), matching exact_dedup's keeper_id convention.
+(min doc id reachable), matching exact_dedup's keeper_id convention. The
+checkpoints live in one `materialize.scope`: each round's are released once
+the next round is materialized, and all of them if the call raises.
 """
 
 from __future__ import annotations
@@ -23,23 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geotreehealth_spark.operators.materialize import scope
 
-def _checkpoint_tracked(df: DataFrame, sc) -> tuple[DataFrame, list]:
-    """localCheckpoint(eager) + the java RDD handles its blocks live in.
-
-    The DataFrame API cannot release localCheckpoint blocks (ADVICE r3), but
-    the sparkContext-level persistent-RDD registry can: diffing the registry
-    around the checkpoint captures exactly the RDDs it created, so the loop
-    below can unpersist round r-1 once round r is materialized instead of
-    leaking O(rounds x |V|) blocks into a long-lived session. Assumes a
-    single-threaded driver (concurrent checkpoints would land in the diff).
-    """
-    reg = sc._jsc.getPersistentRDDs()
-    before = set(reg.keys())
-    out = df.localCheckpoint(eager=True)
-    reg = sc._jsc.getPersistentRDDs()
-    created = [reg[i] for i in reg.keys() if i not in before]
-    return out, created
+# propagation rounds before the call gives up (pointer jumping needs
+# O(log diameter); dedup graphs are clique-ish)
+MAX_ITERS = 50
 
 
 def connected_components(
@@ -47,7 +37,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     nodes: DataFrame | None = None,
-    max_iters: int = 50,
 ) -> DataFrame:
     """(node, comp) for every node, comp = MIN node id in its component.
 
@@ -55,96 +44,72 @@ def connected_components(
     nodes: optional (single-column) node universe; nodes without edges become
            singleton components. Defaults to the edge endpoints.
     Raises RuntimeError if the propagation has not converged after
-    ``max_iters`` rounds (diameter > max_iters — never for dedup graphs).
+    ``MAX_ITERS`` rounds (diameter > MAX_ITERS — never for dedup graphs).
     """
-    # materialize the symmetric edge list ONCE — every propagation round
-    # re-reads it, and the upstream pair generation (e.g. the full Jaccard
-    # inverted-index join) must not re-execute per round (measured 44 s -> a
-    # few s at sf0.1 for the dup_components query)
-    sc = edges.sparkSession.sparkContext
-    live: list = []  # every block created, released wholesale on failure
-
-    def tracked(df: DataFrame) -> tuple[DataFrame, list]:
-        out, blocks = _checkpoint_tracked(df, sc)
-        live.extend(blocks)
-        return out, blocks
-
-    try:
-        return _run(edges, src, dst, nodes, max_iters, tracked)
-    except BaseException:
-        # a failed call must not leak checkpoint blocks into a long-lived
-        # session (unpersist of an already-released RDD is a no-op, so the
-        # wholesale sweep is safe alongside _run's inline releases)
-        for r in live:
-            r.unpersist()
-        raise
-
-
-def _run(edges, src, dst, nodes, max_iters, tracked) -> DataFrame:
-    sym, sym_blocks = tracked(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-    )
-    if nodes is None:
-        node_df = sym.select(F.col("a").alias("node")).distinct()
-    else:
-        node_df = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
-    labels, prev_blocks = tracked(node_df.withColumn("comp", F.col("node")))
-    for _ in range(max_iters):
-        # (a) best neighbor label
-        nbr = (
-            sym.join(
-                labels.select(F.col("node").alias("b"), F.col("comp").alias("__nc")),
-                "b",
+    with scope() as m:
+        # materialize the symmetric edge list ONCE — every propagation round
+        # re-reads it, and the upstream pair generation (e.g. the full
+        # Jaccard inverted-index join) must not re-execute per round
+        # (measured 44 s -> a few s at sf0.1 for the dup_components query)
+        sym = m.checkpoint(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
+                edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
             )
-            .groupBy("a")
-            .agg(F.min("__nc").alias("__nmin"))
-            .select(F.col("a").alias("node"), "__nmin")
         )
-        # (b) pointer jumping (path halving): also adopt the CURRENT label of
-        # my label's node — collapses chain-shaped components in O(log
-        # diameter) rounds instead of O(diameter), and rounds (not rows) are
-        # what a driver-looped fixpoint pays for
-        ptr = labels.select(
-            F.col("node").alias("comp"), F.col("comp").alias("__pc")
-        )
-        new = (
-            labels.join(nbr, "node", "left")
-            .join(ptr, "comp", "left")
-            .select(
-                "node",
-                F.col("comp").alias("__old"),
-                F.least(
-                    F.col("comp"),
-                    F.coalesce(F.col("__nmin"), F.col("comp")),
-                    F.coalesce(F.col("__pc"), F.col("comp")),
-                ).alias("comp"),
+        if nodes is None:
+            node_df = sym.select(F.col("a").alias("node")).distinct()
+        else:
+            node_df = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
+        prev = labels = m.checkpoint(node_df.withColumn("comp", F.col("node")))
+        for _ in range(MAX_ITERS):
+            # (a) best neighbor label
+            nbr = (
+                sym.join(
+                    labels.select(F.col("node").alias("b"), F.col("comp").alias("__nc")),
+                    "b",
+                )
+                .groupBy("a")
+                .agg(F.min("__nc").alias("__nmin"))
+                .select(F.col("a").alias("node"), "__nmin")
             )
-            .withColumn("__changed", (F.col("comp") != F.col("__old")).cast("int"))
-            .select("node", "comp", "__changed")
+            # (b) pointer jumping (path halving): also adopt the CURRENT label
+            # of my label's node — collapses chain-shaped components in
+            # O(log diameter) rounds instead of O(diameter), and rounds (not
+            # rows) are what a driver-looped fixpoint pays for
+            ptr = labels.select(
+                F.col("node").alias("comp"), F.col("comp").alias("__pc")
+            )
+            new = (
+                labels.join(nbr, "node", "left")
+                .join(ptr, "comp", "left")
+                .select(
+                    "node",
+                    F.col("comp").alias("__old"),
+                    F.least(
+                        F.col("comp"),
+                        F.coalesce(F.col("__nmin"), F.col("comp")),
+                        F.coalesce(F.col("__pc"), F.col("comp")),
+                    ).alias("comp"),
+                )
+                .withColumn("__changed", (F.col("comp") != F.col("__old")).cast("int"))
+                .select("node", "comp", "__changed")
+            )
+            # one checkpoint per round keeps lineage flat; the convergence
+            # probe below reads the checkpointed blocks (an in-row flag, not
+            # a join). Round r-1's blocks are released as soon as round r is
+            # materialized (eager=True truncates the dependency), so a
+            # long-lived session holds at most TWO rounds of (node, comp)
+            # blocks plus the edge list, not O(rounds) of them (ADVICE r4).
+            new = m.checkpoint(new)
+            changed = new.agg(F.sum("__changed")).first()[0]
+            m.release(prev)
+            prev, labels = new, new.drop("__changed")
+            if not changed:
+                # the returned handle reads `new`'s blocks — keep those; the
+                # edge list is no longer reachable from it and can go now
+                m.release(sym)
+                return labels
+        raise RuntimeError(
+            f"connected_components did not converge in {MAX_ITERS} rounds "
+            "(graph diameter exceeds MAX_ITERS)"
         )
-        # one checkpoint per round keeps lineage flat; the convergence probe
-        # below reads the checkpointed blocks (an in-row flag, not a join).
-        # Round r-1's blocks are released as soon as round r is materialized
-        # (eager=True truncates the dependency), so a long-lived session
-        # holds at most TWO rounds of (node, comp) blocks plus the edge
-        # list, not O(rounds) of them (ADVICE r4).
-        new, new_blocks = tracked(new)
-        changed = new.agg(F.sum("__changed")).first()[0]
-        for r in prev_blocks:
-            r.unpersist()
-        prev_blocks = new_blocks
-        labels = new.drop("__changed")
-        if not changed:
-            # the returned handle reads new_blocks — keep those; the edge
-            # list is no longer reachable from it and can go now
-            for r in sym_blocks:
-                r.unpersist()
-            return labels
-    for r in sym_blocks + prev_blocks:
-        r.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds "
-        "(graph diameter exceeds max_iters)"
-    )

@@ -24,7 +24,9 @@ differ only in their cell sizing, their per-probe winners (one row per slot:
    to an exact crossJoin once residue x candidates is cheap, the ring spans
    the site, or after four ring rounds. At forest density ring 1 proves
    every probe, so a call costs the bounds agg, one checkpoint job and the
-   residue count.
+   residue count. The call is one `materialize.scope`: the input and
+   winner caches go when it returns, the checkpoints are the result's
+   storage (released if the call raises).
 
 Why this scales: the join is a plain shuffle equi-join on int64 cell keys —
 AQE skew-splits hot cells — and the completeness proofs make the result EXACT
@@ -42,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geotreehealth_spark.geo import cellexprs
-from geotreehealth_spark.operators.components import _checkpoint_tracked
+from geotreehealth_spark.operators.materialize import scope
 from geotreehealth_spark.operators.pip_join import distance_expr
 
 # ring growth per escalation round
@@ -135,15 +137,6 @@ def _dir_reach(
     return out, {d: F.col(f"__{d}") for d in reach}
 
 
-def _cached(df: DataFrame) -> tuple[DataFrame, bool]:
-    """persist df unless the CALLER already persisted it — unpersisting a
-    caller's cache on exit would silently drop their working set. Returns
-    (df, owned): owned=True means this call should unpersist it."""
-    if df.storageLevel.useMemory or df.storageLevel.useDisk:
-        return df, False
-    return df.persist(), True
-
-
 def _argmin(cands: DataFrame, left_id: str, right_id: str, slot: str) -> DataFrame:
     """Per (probe, slot), the (dist asc, right_id asc) first candidate.
 
@@ -220,48 +213,38 @@ def _prove_or_escalate(
     """
     lx, ly = left_xy
     rx, ry = right_xy
-    sc = left.sparkSession.sparkContext
-    # ONE scan of each side feeds the bounds agg, the cell-keyed join input,
-    # every round and the enrichment — profiling at sf0.1 showed each re-scan
-    # of a synthesized right side costs ~2.5 s
-    right_mat, right_owned = _cached(right)
-    left_mat, left_owned = _cached(left)
-    persisted = [df for df, own in ((right_mat, right_owned), (left_mat, left_owned)) if own]
-    blocks: list = []  # checkpoint RDDs: the result's storage, released on failure
-    # slim projections: candidates, winners and proofs move ONLY (id, x, y,
-    # dist); enrich() re-attaches the full rows to the ~|left|*slots winners
-    left_slim = left_mat.select(left_id, lx, ly)
-    right_slim = right_mat.select(right_id, rx, ry)
+    with scope() as m:
+        # ONE scan of each side feeds the bounds agg, the cell-keyed join
+        # input, every round and the enrichment — profiling at sf0.1 showed
+        # each re-scan of a synthesized right side costs ~2.5 s
+        right_mat, left_mat = m.cache(right), m.cache(left)
+        # slim projections: candidates, winners and proofs move ONLY (id, x,
+        # y, dist); enrich() re-attaches the full rows to the ~|left|*slots
+        # winners
+        left_slim = left_mat.select(left_id, lx, ly)
+        right_slim = right_mat.select(right_id, rx, ry)
 
-    def candidates(rem: DataFrame, ring: int | None) -> DataFrame:
-        # ring None: the exact crossJoin (residue fallback, empty right side)
-        if ring is None:
-            c = rem.crossJoin(right_slim)
-        else:
-            c = cellexprs.with_ring_cells(rem, lx, ly, size, ring).join(right_cells, "__cell")
-        c = c.drop("__cell").withColumn(
-            "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-        )
-        return c if min_dist is None else c.where(F.col("dist") >= min_dist)
+        def candidates(rem: DataFrame, ring: int | None) -> DataFrame:
+            # ring None: the exact crossJoin (residue fallback, empty right side)
+            if ring is None:
+                c = rem.crossJoin(right_slim)
+            else:
+                c = cellexprs.with_ring_cells(rem, lx, ly, size, ring).join(right_cells, "__cell")
+            c = c.drop("__cell").withColumn(
+                "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
+            )
+            return c if min_dist is None else c.where(F.col("dist") >= min_dist)
 
-    def enrich(win: DataFrame) -> DataFrame:
-        # winners -> full output rows: AQE broadcasts the slim winner set and
-        # streams the cached left/right sides — no wide shuffles
-        return (
-            win.select(left_id, right_id, "dist", slot)
-            .join(left_mat, left_id)
-            .join(right_mat, right_id)
-            .select(*left.columns, *right.columns, "dist", slot)
-        )
+        def enrich(win: DataFrame) -> DataFrame:
+            # winners -> full output rows: AQE broadcasts the slim winner set
+            # and streams the cached left/right sides — no wide shuffles
+            return (
+                win.select(left_id, right_id, "dist", slot)
+                .join(left_mat, left_id)
+                .join(right_mat, right_id)
+                .select(*left.columns, *right.columns, "dist", slot)
+            )
 
-    def checkpoint(df: DataFrame) -> DataFrame:
-        # localCheckpoint blocks cannot be released through the DataFrame API
-        # (ADVICE r3); tracking their RDDs lets a failed call release them
-        out, created = _checkpoint_tracked(df, sc)
-        blocks.extend(created)
-        return out
-
-    try:
         bounds = _data_bounds(right_mat, rx, ry, right_id)
         if bounds is None:
             # empty candidate side: the same plan over no candidates yields
@@ -286,10 +269,9 @@ def _prove_or_escalate(
             ):
                 parts = min(n_rem * n_right // ROWS_PER_TASK + 1, MAX_TASKS)
                 win = winners(candidates(rem.repartition(parts), None))
-                goods.append(checkpoint(enrich(win)))
+                goods.append(m.checkpoint(enrich(win)))
                 break
-            win = winners(candidates(rem, ring)).persist()  # proof, good piece
-            persisted.append(win)
+            win = m.cache(winners(candidates(rem, ring)))  # proof, good piece
             probes, reach = _dir_reach(rem, lx, ly, size, ring, box)
             proven = _proven(probes, win, left_id, slot, slots, slot_reach(reach, box))
             good = enrich(win.join(proven, left_id, "left_semi"))
@@ -301,7 +283,7 @@ def _prove_or_escalate(
                 else F.lit(None).cast(f.dataType).alias(f.name)
                 for f in good.schema.fields
             ])
-            chk = checkpoint(
+            chk = m.checkpoint(
                 good.withColumn("__residue", F.lit(False)).unionByName(
                     residue.withColumn("__residue", F.lit(True))
                 )
@@ -319,16 +301,6 @@ def _prove_or_escalate(
                 break
             ring *= ESCALATION
         return reduce(DataFrame.unionByName, goods)
-    except BaseException:
-        # a failed call must not leak checkpoint blocks into a long-lived
-        # session (on success they ARE the result's storage)
-        for rdd in blocks:
-            rdd.unpersist()
-        raise
-    finally:
-        # the result reads only checkpoint blocks — the caches can go
-        for df in persisted:
-            df.unpersist()
 
 
 def knn_join(

@@ -17,18 +17,21 @@ Reference semantics:
   order so the sample is reproducible across engines and retries.
 
 All selection logic is min-struct aggregation or rank windows over slim
-columns — map-side combinable, no driver loops, no Python in the hot path.
+columns — map-side combinable, no Python in the hot path; the one driver
+loop is random_k_sample's threshold escalation.
 """
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from geotreehealth_spark.operators.knn import _cached, knn_join
+from geotreehealth_spark.operators.knn import knn_join
+from geotreehealth_spark.operators.materialize import cached, scope
 from geotreehealth_spark.operators.pip_join import distance_expr, pip_join
 
 
@@ -58,8 +61,7 @@ def containing_else_nearest(
     # matched arm AND the residue anti-join. All three lineages were
     # recomputed per consumer (crowns' groupBy derivation twice per call) —
     # persist each once; the session-level cache sweep releases them.
-    points, _ = _cached(points)
-    polygons, _ = _cached(polygons)
+    points, polygons = cached(points), cached(polygons)
     contained = pip_join(
         points.select(point_id, px, py), polygons, cell_size, px, py, poly_wkb, poly_bounds
     )
@@ -176,6 +178,12 @@ def same_tag_pair_distances(
 
 
 RANDOM_K_HASH_P = 1000003
+# |L|·|R| up to which the direct window rank over the enumerated product
+# runs instead of the hash-threshold rounds
+DIRECT_MAX_PAIRS = 2_000_000
+# the threshold keeps ~OVERSAMPLE·k candidates per probe; a short probe
+# escalates the threshold by this factor (at least 2)
+OVERSAMPLE = 8
 
 
 def random_k_sample(
@@ -187,8 +195,6 @@ def random_k_sample(
     left_key: str,
     right_key: str,
     self_key: str | None = None,
-    direct_max_pairs: int = 2_000_000,
-    oversample: int = 8,
 ) -> DataFrame:
     """J7: k deterministic pseudo-random candidates per probe.
 
@@ -199,10 +205,10 @@ def random_k_sample(
     self_key: optional left column equal to right_key for self-exclusion.
 
     Plans (identical output, cost-switched like nms/knn residues):
-    - |L|·|R| <= direct_max_pairs: window rank over the enumerated product.
+    - |L|·|R| <= DIRECT_MAX_PAIRS: window rank over the enumerated product.
     - else: candidates with h < T survive into the shuffle + per-probe sort,
-      T sized so ~oversample·k survive per probe (h is near-uniform mod p).
-      Probes with < k survivors (hash clumping) escalate T x oversample and
+      T sized so ~OVERSAMPLE·k survive per probe (h is near-uniform mod p).
+      Probes with < k survivors (hash clumping) escalate T x OVERSAMPLE and
       re-scan only those probes; the last escalation is T = p (full
       product), so the result is EXACTLY the global top-k draw regardless of
       distribution — same completeness-proof-or-escalate shape as the kNN
@@ -210,15 +216,16 @@ def random_k_sample(
       enumerated |L|·|R| product — the affine hash decomposes into
       per-probe admissible rv-intervals, the right side is bucketed by
       rv = (40503·rk) mod p once, and each round is an equi-join on the
-      bucket id touching only ~oversample·k right rows per probe, with the
+      bucket id touching only ~OVERSAMPLE·k right rows per probe, with the
       original h < T predicate re-applied after the join (the candidate set
       is provably the enumerated plan's). Scan, shuffle and sort volumes
-      are all O(oversample·k·|L|) per round.
+      are all O(OVERSAMPLE·k·|L|) per round.
+    Both plans are eager: the result reads checkpoint blocks only, so the
+    input caches are released on return.
     """
     lk = F.col(left_key)
     rk = F.col(right_key)
     h = F.pmod(lk * F.lit(48271) + rk * F.lit(40503), F.lit(RANDOM_K_HASH_P))
-    w = Window.partitionBy(left_id).orderBy(h.asc(), F.col(right_id).asc())
 
     def enumerate_pairs(probes: DataFrame) -> DataFrame:
         pairs = probes.crossJoin(right)
@@ -230,108 +237,93 @@ def random_k_sample(
         # `h < T` predicate dropped them: results flipped with input size)
         return pairs.where(h.isNotNull())
 
-    # r6 (ADVICE r5): persist BEFORE counting — the counts then materialize
-    # the same caches every later branch reads, instead of computing the
-    # upstream lineage once for the cost-switch counts and again for the
-    # plans. The direct branch's returned plan reads the caches too (released
-    # by the session-level cache sweep, like other lazily-returned results).
-    left_mat, l_owned = _cached(left)
-    right_mat, r_owned = _cached(right)
-    right = right_mat  # rebind: enumerate_pairs closes over this name
-    n_left = left_mat.count()
-    n_right = right_mat.count()
-    if n_left * n_right <= direct_max_pairs:
+    def top_k(cands: DataFrame, hash_col: Column) -> DataFrame:
+        w = Window.partitionBy(left_id).orderBy(hash_col.asc(), F.col(right_id).asc())
         return (
-            enumerate_pairs(left_mat)
-            .withColumn("draw_rank", F.row_number().over(w))
+            cands.withColumn("draw_rank", F.row_number().over(w))
             .where(F.col("draw_rank") <= k)
             .select(left_id, right_id, "draw_rank")
         )
 
-    import math
+    with scope() as m:
+        # r6 (ADVICE r5): persist BEFORE counting — the counts then
+        # materialize the same caches every later branch reads, instead of
+        # computing the upstream lineage once for the cost-switch counts and
+        # again for the plans
+        left_mat, right = m.cache(left), m.cache(right)  # enumerate_pairs reads `right`
+        n_left = left_mat.count()
+        n_right = right.count()
+        if n_left * n_right <= DIRECT_MAX_PAIRS:
+            return m.checkpoint(top_k(enumerate_pairs(left_mat), h))
+        frac = min(1.0, (OVERSAMPLE * k) / max(n_right, 1))
+        threshold = max(1, int(math.ceil(RANDOM_K_HASH_P * frac)))
 
-    frac = min(1.0, (oversample * k) / max(n_right, 1))
-    threshold = max(1, int(math.ceil(RANDOM_K_HASH_P * frac)))
-
-    # Bucketed admissible-window join (r6, VERDICT r5 item 5): the affine
-    # draw hash decomposes as h = (a + rv) mod p with a = (48271·lk) mod p
-    # and rv = (40503·rk) mod p (valid while 48271·lk / 40503·rk stay inside
-    # int64, i.e. |key| < ~1.9e14 — beyond that the ORIGINAL h expression
-    # already wraps and its documented affine semantics are void anyway).
-    # h < T therefore admits, per probe, at most TWO rv-intervals:
-    # [0, T−a) and [p−a, p−a+T) ∩ [0, p). The right side is bucketed by rv
-    # ONCE; each probe explodes to only the ~T·n_buckets/p + 2 buckets its
-    # intervals touch, and the join is a plain equi-join on the bucket id —
-    # the enumerated volume drops from |L|·|R| to ~|L|·oversample·k rows.
-    # SAFETY: bucket coverage only needs to be a SUPERSET of the admissible
-    # rows — the loop re-applies the ORIGINAL `h < T` predicate after the
-    # join, so the candidate set (and the draw) is provably identical to the
-    # enumerated plan's. The final T = p round keeps the crossJoin (every
-    # bucket would be admissible).
-    P = RANDOM_K_HASH_P
-    n_buckets = int(min(max(16, (2 * n_right) // max(k, 1)), 1_048_576))
-    bucket_w = -(-P // n_buckets)  # ceil(P / n_buckets)
-    right_b = right_mat.withColumn(
-        "__rb",
-        F.floor(F.pmod(rk * F.lit(40503), F.lit(P)) / F.lit(bucket_w)).cast("long"),
-    )
-
-    def bucketed_pairs(probes: DataFrame, t: int) -> DataFrame:
-        a = F.pmod(lk * F.lit(48271), F.lit(P))
-        hi1 = F.lit(t) - a  # exclusive end of interval 1 (start 0); may be <= 0
-        lo2 = F.lit(P) - a  # interval 2 start; empty when a == 0
-        hi2 = F.least(F.lit(P), lo2 + F.lit(t))
-        empty = F.array().cast("array<bigint>")
-        seq1 = F.when(
-            hi1 > 0,
-            F.sequence(
-                F.lit(0).cast("long"),
-                F.floor((hi1 - 1) / F.lit(bucket_w)).cast("long"),
-            ),
+        # Bucketed admissible-window join (r6, VERDICT r5 item 5): the affine
+        # draw hash decomposes as h = (a + rv) mod p with a = (48271·lk) mod
+        # p and rv = (40503·rk) mod p (valid while 48271·lk / 40503·rk stay
+        # inside int64, i.e. |key| < ~1.9e14 — beyond that the ORIGINAL h
+        # expression already wraps and its documented affine semantics are
+        # void anyway). h < T therefore admits, per probe, at most TWO
+        # rv-intervals: [0, T−a) and [p−a, p−a+T) ∩ [0, p). The right side
+        # is bucketed by rv ONCE; each probe explodes to only the
+        # ~T·n_buckets/p + 2 buckets its intervals touch, and the join is a
+        # plain equi-join on the bucket id — the enumerated volume drops
+        # from |L|·|R| to ~|L|·OVERSAMPLE·k rows.
+        # SAFETY: bucket coverage only needs to be a SUPERSET of the
+        # admissible rows — the loop re-applies the ORIGINAL `h < T`
+        # predicate after the join, so the candidate set (and the draw) is
+        # provably identical to the enumerated plan's. The final T = p round
+        # keeps the crossJoin (every bucket would be admissible).
+        P = RANDOM_K_HASH_P
+        n_buckets = int(min(max(16, (2 * n_right) // max(k, 1)), 1_048_576))
+        bucket_w = -(-P // n_buckets)  # ceil(P / n_buckets)
+        right_b = right.withColumn(
+            "__rb",
+            F.floor(F.pmod(rk * F.lit(40503), F.lit(P)) / F.lit(bucket_w)).cast("long"),
         )
-        seq2 = F.when(
-            hi2 > lo2,
-            F.sequence(
-                F.floor(lo2 / F.lit(bucket_w)).cast("long"),
-                F.floor((hi2 - 1) / F.lit(bucket_w)).cast("long"),
-            ),
-        )
-        buckets = F.array_distinct(
-            F.flatten(F.array(F.coalesce(seq1, empty), F.coalesce(seq2, empty)))
-        )
-        # NULL-keyed probes yield a NULL bucket array → explode drops them,
-        # matching enumerate_pairs' h-notnull filter; NULL right keys get a
-        # NULL __rb and never join
-        pairs = probes.withColumn("__rb", F.explode(buckets)).join(right_b, "__rb")
-        if self_key is not None:
-            pairs = pairs.where(F.col(self_key) != rk)
-        return pairs.where(h.isNotNull())
-    # the escalation loop is fully eager (checkpoint per round), so the
-    # cached inputs serve its rounds and are released before returning.
-    # The per-round `cand` checkpoint blocks ARE the result's storage and
-    # stay live until the session-level release (bench release_caches), like
-    # every checkpointed result in this engine.
-    remaining = left_mat
-    from geotreehealth_spark.operators.components import _checkpoint_tracked
 
-    sc = left_mat.sparkSession.sparkContext
-    parts: list[DataFrame] = []
-    checkpointed_rdds: list = []
-    try:
+        def bucketed_pairs(probes: DataFrame, t: int) -> DataFrame:
+            a = F.pmod(lk * F.lit(48271), F.lit(P))
+            hi1 = F.lit(t) - a  # exclusive end of interval 1 (start 0); may be <= 0
+            lo2 = F.lit(P) - a  # interval 2 start; empty when a == 0
+            hi2 = F.least(F.lit(P), lo2 + F.lit(t))
+            empty = F.array().cast("array<bigint>")
+            seq1 = F.when(
+                hi1 > 0,
+                F.sequence(
+                    F.lit(0).cast("long"),
+                    F.floor((hi1 - 1) / F.lit(bucket_w)).cast("long"),
+                ),
+            )
+            seq2 = F.when(
+                hi2 > lo2,
+                F.sequence(
+                    F.floor(lo2 / F.lit(bucket_w)).cast("long"),
+                    F.floor((hi2 - 1) / F.lit(bucket_w)).cast("long"),
+                ),
+            )
+            buckets = F.array_distinct(
+                F.flatten(F.array(F.coalesce(seq1, empty), F.coalesce(seq2, empty)))
+            )
+            # NULL-keyed probes yield a NULL bucket array → explode drops
+            # them, matching enumerate_pairs' h-notnull filter; NULL right
+            # keys get a NULL __rb and never join
+            pairs = probes.withColumn("__rb", F.explode(buckets)).join(right_b, "__rb")
+            if self_key is not None:
+                pairs = pairs.where(F.col(self_key) != rk)
+            return pairs.where(h.isNotNull())
+
+        # the per-round `cand` checkpoint blocks ARE the result's storage
+        remaining = left_mat
+        parts: list[DataFrame] = []
         while True:
             final = threshold >= RANDOM_K_HASH_P
-            src = (
-                enumerate_pairs(remaining)
-                if final
-                else bucketed_pairs(remaining, threshold)
-            )
-            cand, created = _checkpoint_tracked(
+            src = enumerate_pairs(remaining) if final else bucketed_pairs(remaining, threshold)
+            cand = m.checkpoint(
                 src.withColumn("__h", h)
                 .where(F.col("__h") < F.lit(threshold))
-                .select(left_id, right_id, "__h"),
-                sc,
+                .select(left_id, right_id, "__h")
             )
-            checkpointed_rdds.extend(created)
             # >= k survivors under T ⇒ the k-th smallest (h, right_id) is
             # under T too ⇒ this probe's global top-k is fully inside `cand`
             satisfied = (
@@ -339,38 +331,14 @@ def random_k_sample(
                 .select(left_id)
             )
             done = cand if final else cand.join(satisfied, left_id, "left_semi")
-            parts.append(
-                done.withColumn("draw_rank", F.row_number().over(
-                    Window.partitionBy(left_id).orderBy(
-                        F.col("__h").asc(), F.col(right_id).asc()
-                    )
-                ))
-                .where(F.col("draw_rank") <= k)
-                .select(left_id, right_id, "draw_rank")
-            )
+            parts.append(top_k(done, F.col("__h")))
             if final:
                 break
             remaining = remaining.join(satisfied, left_id, "left_anti")
             if remaining.isEmpty():
                 break
-            # escalation factor floored at 2: with oversample=1 a literal
-            # `*= oversample` never grows T and the loop spins forever
+            # escalation factor floored at 2: with OVERSAMPLE=1 a literal
+            # `*= OVERSAMPLE` never grows T and the loop spins forever
             # re-scanning the same shortfall probes at the same threshold
-            threshold *= max(2, oversample)
-    except BaseException:
-        # r6 (ADVICE r5): a mid-loop failure must not leak the per-round
-        # checkpoint blocks into a long-lived session — on success they ARE
-        # the result's storage, but a raised call returns nothing that reads
-        # them. Release goes through the registry-diffed java RDD handles
-        # (components._checkpoint_tracked): the DataFrame-level unpersist is
-        # a documented no-op for localCheckpoint blocks (ADVICE r3).
-        for r in checkpointed_rdds:
-            r.unpersist()
-        raise
-    finally:
-        # parts read only the checkpointed blocks — the input caches can go
-        if l_owned:
-            left_mat.unpersist()
-        if r_owned:
-            right_mat.unpersist()
-    return reduce(lambda a, b: a.unionByName(b), parts)
+            threshold *= max(2, OVERSAMPLE)
+        return reduce(lambda a, b: a.unionByName(b), parts)

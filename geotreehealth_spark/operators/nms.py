@@ -9,7 +9,7 @@ Greedy NMS is order-sequential and global — the classic hazard for
 distribution (SURVEY.md §7 hazard 1). The engine reformulates it exactly:
 
 1. CONFLICT GRAPH (distributed): cell-partitioned self-join (overlap.py)
-   yields all pairs with overlap-criterion > threshold; each edge is oriented
+   yields all pairs with overlap measure > threshold; each edge is oriented
    winner→loser by the global total order (score desc, id asc). Pair
    discovery is exact: overlapping polygons share a covering cell.
 2. FIXPOINT (driver loop over tiny frontier): sequential greedy is equivalent
@@ -23,8 +23,8 @@ distribution (SURVEY.md §7 hazard 1). The engine reformulates it exactly:
    heavy lifting (pair discovery) happened once, fully distributed.
 
 This reproduces the sequential result EXACTLY (proved by parity tests vs the
-reference-order numpy oracle in tests/test_nms.py), unlike per-tile NMS which
-drifts at tile borders.
+reference-order numpy oracle in tests/test_spatial_parity.py), unlike
+per-tile NMS which drifts at tile borders.
 """
 
 from __future__ import annotations
@@ -32,9 +32,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotreehealth_spark.operators.knn import _cached
-from geotreehealth_spark.operators.overlap import overlap_selfjoin
-from geotreehealth_spark.operators.udfs import overlap_ratio_udf, iou_udf
+from geotreehealth_spark.operators.materialize import cached, scope
+from geotreehealth_spark.operators.overlap import box_areas, box_iou_cols, overlap_selfjoin
+from geotreehealth_spark.operators.udfs import overlap_ratio_udf
+
+# conflict edges up to which the fixpoint runs as a numpy loop on the driver
+DRIVER_FIXPOINT_MAX = 2_000_000
+# distributed fixpoint rounds (= longest suppression chain) before it raises
+MAX_ROUNDS = 64
+
+
+def _oriented(pairs: DataFrame, id_a: str, id_b: str, score_a: str, score_b: str) -> DataFrame:
+    """(winner, loser) per pair under the global greedy order: score desc,
+    id asc."""
+    a_wins = (F.col(score_a) > F.col(score_b)) | (
+        (F.col(score_a) == F.col(score_b)) & (F.col(id_a) < F.col(id_b))
+    )
+    return pairs.select(
+        F.when(a_wins, F.col(id_a)).otherwise(F.col(id_b)).alias("winner"),
+        F.when(a_wins, F.col(id_b)).otherwise(F.col(id_a)).alias("loser"),
+    )
 
 
 def nms_conflict_edges(
@@ -45,21 +62,19 @@ def nms_conflict_edges(
     cell_size: float = 50.0,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
     wkb_col: str | None = None,
-    criterion: str = "overlap_ratio",
     area_col: str | None = None,
 ) -> DataFrame:
     """Directed conflict edges (winner, loser) under the global greedy order.
 
-    criterion: 'overlap_ratio' (inter/max area, get_polygons.py:806-816) or
-    'iou' (batch_sam.py:699). With wkb_col=None boxes are exact geometry;
+    The measure is the reference's overlap ratio, inter / max area
+    (get_polygons.py:806-816). With wkb_col=None boxes are exact geometry;
     otherwise the polygon kernel refines the bbox candidates.
 
     area_col: optional TRUE polygon area column. When present, the JVM prune
     keeps only pairs with box_inter / max(poly_area) > threshold — sound for
-    both criteria for ANY polygons (poly_inter <= box_inter; denominators
-    max-area and union are both >= max poly area). Without it the prune is
-    just box_inter > 0 (previous rounds used a convex-area >= bbox/2 claim
-    that thin diagonal slivers violate — ADVICE.md round 1).
+    ANY polygons (poly_inter <= box_inter). Without it the prune is just
+    box_inter > 0 (previous rounds used a convex-area >= bbox/2 claim that
+    thin diagonal slivers violate — ADVICE.md round 1).
 
     Plan note: the cell self-join runs on SLIM columns (id, score, bbox) so
     the quadratic candidate stream never carries WKB blobs; polygon payloads
@@ -69,25 +84,15 @@ def nms_conflict_edges(
     slim_cols = [id_col, score_col, *bounds] + ([area_col] if area_col else [])
     slim = polys.select(*slim_cols)
     pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
-    if wkb_col is not None:
-        x0, y0, x1, y1 = bounds
-        biw = F.greatest(
-            F.least(F.col(f"a_{x1}"), F.col(f"b_{x1}"))
-            - F.greatest(F.col(f"a_{x0}"), F.col(f"b_{x0}")),
-            F.lit(0.0),
-        )
-        bih = F.greatest(
-            F.least(F.col(f"a_{y1}"), F.col(f"b_{y1}"))
-            - F.greatest(F.col(f"a_{y0}"), F.col(f"b_{y0}")),
-            F.lit(0.0),
-        )
+    inter, area_a, area_b = box_areas(bounds=bounds)
+    if wkb_col is None:
+        measure = inter / F.greatest(area_a, area_b)
+    else:
         if area_col is not None:
-            sound_bound = (biw * bih) / F.greatest(
-                F.col(f"a_{area_col}"), F.col(f"b_{area_col}")
-            )
+            sound_bound = inter / F.greatest(F.col(f"a_{area_col}"), F.col(f"b_{area_col}"))
             pairs = pairs.where(sound_bound > threshold)
         else:
-            pairs = pairs.where(biw * bih > 0.0)
+            pairs = pairs.where(inter > 0.0)
         geoms = polys.select(id_col, wkb_col)
         pairs = pairs.join(
             geoms.select(
@@ -100,40 +105,12 @@ def nms_conflict_edges(
             ),
             f"b_{id_col}",
         )
-        udf = overlap_ratio_udf if criterion == "overlap_ratio" else iou_udf
-        measure = udf(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
-    else:
-        from geotreehealth_spark.operators.overlap import box_iou_cols
-
-        if criterion == "iou":
-            measure = box_iou_cols(bounds=bounds)
-        else:
-            x0, y0, x1, y1 = bounds
-            iw = F.greatest(
-                F.least(F.col(f"a_{x1}"), F.col(f"b_{x1}"))
-                - F.greatest(F.col(f"a_{x0}"), F.col(f"b_{x0}")),
-                F.lit(0.0),
-            )
-            ih = F.greatest(
-                F.least(F.col(f"a_{y1}"), F.col(f"b_{y1}"))
-                - F.greatest(F.col(f"a_{y0}"), F.col(f"b_{y0}")),
-                F.lit(0.0),
-            )
-            area_a = (F.col(f"a_{x1}") - F.col(f"a_{x0}")) * (F.col(f"a_{y1}") - F.col(f"a_{y0}"))
-            area_b = (F.col(f"b_{x1}") - F.col(f"b_{x0}")) * (F.col(f"b_{y1}") - F.col(f"b_{y0}"))
-            measure = (iw * ih) / F.greatest(area_a, area_b)
-
-    conflicts = pairs.where(measure > threshold)
-    # orient by global greedy order: (score desc, id asc)
-    a_wins = (F.col(f"a_{score_col}") > F.col(f"b_{score_col}")) | (
-        (F.col(f"a_{score_col}") == F.col(f"b_{score_col}"))
-        & (F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
-    )
+        measure = overlap_ratio_udf(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
     # no .distinct(): overlap_selfjoin's reporting-cell rule already emits
     # each unordered pair exactly once
-    return conflicts.select(
-        F.when(a_wins, F.col(f"a_{id_col}")).otherwise(F.col(f"b_{id_col}")).alias("winner"),
-        F.when(a_wins, F.col(f"b_{id_col}")).otherwise(F.col(f"a_{id_col}")).alias("loser"),
+    return _oriented(
+        pairs.where(measure > threshold),
+        f"a_{id_col}", f"b_{id_col}", f"a_{score_col}", f"b_{score_col}",
     )
 
 
@@ -145,20 +122,18 @@ def greedy_nms(
     cell_size: float = 50.0,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
     wkb_col: str | None = None,
-    criterion: str = "overlap_ratio",
     area_col: str | None = None,
-    max_rounds: int = 64,
-    driver_fixpoint_max: int = 2_000_000,
     precomputed_edges: DataFrame | None = None,
 ) -> DataFrame:
     """polys + `selected` boolean, exactly matching sequential greedy NMS.
 
     The conflict-edge DISCOVERY is always fully distributed (the quadratic
     part). The fixpoint itself is O(edges x chain-depth): when the edge list
-    fits on the driver (< driver_fixpoint_max int64 pairs) it runs as a
+    fits on the driver (<= DRIVER_FIXPOINT_MAX int64 pairs) it runs as a
     vectorized numpy loop there — hundreds of rounds at milliseconds each
     instead of seconds per distributed round of tiny joins. Beyond the cap the
-    distributed join-based fixpoint takes over (identical semantics).
+    distributed join-based fixpoint takes over (identical semantics); it
+    keeps only the current round's checkpoint blocks.
 
     ``precomputed_edges``: optional (winner, loser) conflict edges already
     oriented by the greedy order — weighted_nms passes the edges it derives
@@ -169,90 +144,93 @@ def greedy_nms(
     # r6: the polys lineage is read at least twice per call (conflict-edge
     # discovery + the final selected join; 3x in weighted_nms) — persist it
     # once instead of re-deriving the upstream joins/aggregations per use
-    polys, _ = _cached(polys)
-    # localCheckpoint each round: the fixpoint otherwise builds an
-    # exponentially-deep logical plan (classic iterative-DataFrame trap) and
-    # the driver burns all its time in Catalyst re-analysis.
-    edges = (
-        precomputed_edges
-        if precomputed_edges is not None
-        else nms_conflict_edges(
-            polys, id_col, score_col, threshold, cell_size, bounds, wkb_col,
-            criterion, area_col,
+    polys = cached(polys)
+    with scope() as m:
+        # localCheckpoint each round: the fixpoint otherwise builds an
+        # exponentially-deep logical plan (classic iterative-DataFrame trap)
+        # and the driver burns all its time in Catalyst re-analysis.
+        edges = m.checkpoint(
+            precomputed_edges
+            if precomputed_edges is not None
+            else nms_conflict_edges(
+                polys, id_col, score_col, threshold, cell_size, bounds, wkb_col, area_col
+            )
         )
-    ).localCheckpoint(eager=True)
+        if edges.count() <= DRIVER_FIXPOINT_MAX:
+            suppressed_ids = _fixpoint_local(edges.toPandas())
+            m.release(edges)
+            if not suppressed_ids:
+                return polys.withColumn("selected", F.lit(True))
+            spark = polys.sparkSession
+            from pyspark.sql.types import StructField, StructType
 
-    if edges.count() <= driver_fixpoint_max:
-        suppressed_ids = _fixpoint_local(edges.toPandas())
-        if not suppressed_ids:
+            id_type = polys.schema[id_col].dataType  # not hardcoded string (ADVICE.md)
+            # r6: ship the suppressed ids through the Arrow createDataFrame
+            # path (pandas input) — the row-tuple path pickles ~60k ids one
+            # by one
+            import pandas as pd
+
+            supp_df = spark.createDataFrame(
+                pd.DataFrame({id_col: suppressed_ids}),
+                StructType([StructField(id_col, id_type)]),
+            ).withColumn("__supp", F.lit(True))
+            return (
+                polys.join(F.broadcast(supp_df), id_col, "left")
+                .withColumn("selected", F.col("__supp").isNull())
+                .drop("__supp")
+            )
+
+        suppressed: DataFrame | None = None
+        for _ in range(MAX_ROUNDS):
+            if edges.limit(1).count() == 0:
+                break
+            # kept-for-sure: winners that are nobody's loser in the live graph
+            losers = edges.select(F.col("loser").alias("id")).distinct()
+            kept_now = (
+                edges.select(F.col("winner").alias("id"))
+                .distinct()
+                .join(losers, "id", "left_anti")
+            )
+            # their direct losers are suppressed for good
+            newly = m.checkpoint(
+                edges.join(kept_now.withColumnRenamed("id", "winner"), "winner")
+                .select(F.col("loser").alias("id"))
+                .distinct()
+            )
+            if newly.limit(1).count() == 0:
+                m.release(newly)
+                break  # no sources left → remaining graph is empty (DAG is acyclic)
+            if suppressed is None:
+                suppressed = newly
+            else:
+                prev = suppressed
+                suppressed = m.checkpoint(prev.unionByName(newly).distinct())
+                m.release(prev)
+                m.release(newly)
+            # drop edges involving suppressed nodes (they can no longer
+            # suppress), and edges whose loser is already suppressed (decided)
+            prev = edges
+            edges = m.checkpoint(
+                edges.join(suppressed.withColumnRenamed("id", "winner"), "winner", "left_anti")
+                .join(suppressed.withColumnRenamed("id", "loser"), "loser", "left_anti")
+            )
+            m.release(prev)
+        if edges.limit(1).count() != 0:
+            # never return a partial result: a suppression chain deeper than
+            # MAX_ROUNDS means undecided nodes would silently default to
+            # selected=True (ADVICE.md round 1) — fail loudly instead
+            raise RuntimeError(
+                f"greedy_nms distributed fixpoint did not converge in {MAX_ROUNDS} "
+                "rounds (chain depth exceeds MAX_ROUNDS)"
+            )
+        m.release(edges)  # the result reads only `suppressed`
+        if suppressed is None:
             return polys.withColumn("selected", F.lit(True))
-        spark = polys.sparkSession
-        from pyspark.sql.types import StructField, StructType
-
-        id_type = polys.schema[id_col].dataType  # not hardcoded string (ADVICE.md)
-        # r6: ship the suppressed ids through the Arrow createDataFrame path
-        # (pandas input) — the row-tuple path pickles ~60k ids one by one
-        import pandas as pd
-
-        supp_df = spark.createDataFrame(
-            pd.DataFrame({id_col: suppressed_ids}),
-            StructType([StructField(id_col, id_type)]),
-        ).withColumn("__supp", F.lit(True))
-        return (
-            polys.join(F.broadcast(supp_df), id_col, "left")
-            .withColumn("selected", F.col("__supp").isNull())
-            .drop("__supp")
-        )
-
-    suppressed_acc: DataFrame | None = None
-    for _ in range(max_rounds):
-        if edges.limit(1).count() == 0:
-            break
-        # kept-for-sure: winners that are nobody's loser in the live graph
-        losers = edges.select(F.col("loser").alias("id")).distinct()
-        kept_now = (
-            edges.select(F.col("winner").alias("id"))
-            .distinct()
-            .join(losers, "id", "left_anti")
-        )
-        # their direct losers are suppressed for good
-        newly_suppressed = (
-            edges.join(kept_now.withColumnRenamed("id", "winner"), "winner")
-            .select(F.col("loser").alias("id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if newly_suppressed.limit(1).count() == 0:
-            break  # no sources left → remaining graph is empty (DAG is acyclic)
-        suppressed_acc = (
-            newly_suppressed
-            if suppressed_acc is None
-            else suppressed_acc.unionByName(newly_suppressed)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # drop edges involving suppressed nodes (they can no longer suppress),
-        # and edges whose loser is already suppressed (decided)
-        edges = (
-            edges.join(suppressed_acc.withColumnRenamed("id", "winner"), "winner", "left_anti")
-            .join(suppressed_acc.withColumnRenamed("id", "loser"), "loser", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-    if edges.limit(1).count() != 0:
-        # never return a partial result: a suppression chain deeper than
-        # max_rounds means undecided nodes would silently default to
-        # selected=True (ADVICE.md round 1) — fail loudly instead
-        raise RuntimeError(
-            f"greedy_nms distributed fixpoint did not converge in {max_rounds} "
-            "rounds; raise max_rounds (chain depth exceeds it)"
-        )
-    if suppressed_acc is None:
-        return polys.withColumn("selected", F.lit(True))
-    return polys.join(
-        suppressed_acc.withColumnRenamed("id", id_col).withColumn("__supp", F.lit(True)),
-        id_col,
-        "left",
-    ).withColumn("selected", F.col("__supp").isNull()).drop("__supp")
+        return polys.join(
+            suppressed.withColumnRenamed("id", id_col).withColumn("__supp", F.lit(True)),
+            id_col,
+            "left",
+        ).withColumn("selected", F.col("__supp").isNull()).drop("__supp")
 
 
 def weighted_nms(
@@ -262,15 +240,15 @@ def weighted_nms(
     threshold: float = 0.5,
     cell_size: float = 50.0,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    criterion: str = "iou",
     score_col: str = "wscore",
 ) -> DataFrame:
     """W4 weighted NMS (batch_sam.py:692-731): score = priority - Σ overlap.
 
     Reference semantics: per polygon, priority (crwnpst + DBH via identity
-    funcs, batch_sam.py:579-580) minus the sum of pairwise overlaps that
-    exceed the threshold; polygons are then processed greedily in score order,
-    keeping those whose overlap with every kept polygon is <= threshold.
+    funcs, batch_sam.py:579-580) minus the sum of pairwise box IoUs that
+    exceed the threshold (batch_sam.py:699); polygons are then processed
+    greedily in score order, keeping those whose IoU with every kept polygon
+    is <= threshold.
 
     Determinism note (documented deviation, SURVEY.md §7 style): the overlap
     penalty sums doubles over a variable-cardinality neighbor set, whose IEEE
@@ -280,22 +258,16 @@ def weighted_nms(
     which is order-independent and exact in both engines; the final score is
     priority - penalty_micro / 1e6.
     """
-    polys, _ = _cached(polys)  # read by the pair join AND the scored join (r6)
+    polys = cached(polys)  # read by the pair join AND the scored join (r6)
     slim = polys.select(id_col, *bounds)
     pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
-    if criterion == "iou":
-        from geotreehealth_spark.operators.overlap import box_iou_cols
-
-        m = box_iou_cols(bounds=bounds)
-    else:
-        m = _box_overlap_ratio_cols(bounds)
     # r6: ONE quadratic pair-discovery pass. The threshold-surviving pairs
     # feed BOTH the penalty aggregation and (with wscore attached per
     # endpoint by two slim id-joins) the greedy conflict edges — previously
     # greedy_nms re-ran the whole cell self-join on the scored table, so the
     # dominant quadratic stage executed twice with identical pair output.
     contrib = (
-        pairs.withColumn("__m", m)
+        pairs.withColumn("__m", box_iou_cols(bounds=bounds))
         .where(F.col("__m") > threshold)
         .select(
             F.col(f"a_{id_col}").alias("__ida"),
@@ -328,35 +300,11 @@ def weighted_nms(
     ).join(
         sc.select(F.col(id_col).alias("__idb"), F.col(score_col).alias("__sb")), "__idb"
     )
-    a_wins = (F.col("__sa") > F.col("__sb")) | (
-        (F.col("__sa") == F.col("__sb")) & (F.col("__ida") < F.col("__idb"))
-    )
-    edges = oriented.select(
-        F.when(a_wins, F.col("__ida")).otherwise(F.col("__idb")).alias("winner"),
-        F.when(a_wins, F.col("__idb")).otherwise(F.col("__ida")).alias("loser"),
-    )
     return greedy_nms(
         scored, id_col=id_col, score_col=score_col, threshold=threshold,
-        cell_size=cell_size, bounds=bounds, wkb_col=None, criterion=criterion,
-        precomputed_edges=edges,
+        cell_size=cell_size, bounds=bounds, wkb_col=None,
+        precomputed_edges=_oriented(oriented, "__ida", "__idb", "__sa", "__sb"),
     )
-
-
-def _box_overlap_ratio_cols(bounds):
-    x0, y0, x1, y1 = bounds
-    iw = F.greatest(
-        F.least(F.col(f"a_{x1}"), F.col(f"b_{x1}"))
-        - F.greatest(F.col(f"a_{x0}"), F.col(f"b_{x0}")),
-        F.lit(0.0),
-    )
-    ih = F.greatest(
-        F.least(F.col(f"a_{y1}"), F.col(f"b_{y1}"))
-        - F.greatest(F.col(f"a_{y0}"), F.col(f"b_{y0}")),
-        F.lit(0.0),
-    )
-    area_a = (F.col(f"a_{x1}") - F.col(f"a_{x0}")) * (F.col(f"a_{y1}") - F.col(f"a_{y0}"))
-    area_b = (F.col(f"b_{x1}") - F.col(f"b_{x0}")) * (F.col(f"b_{y1}") - F.col(f"b_{y0}"))
-    return (iw * ih) / F.greatest(area_a, area_b)
 
 
 # ---------------------------------------------------------------------------
@@ -372,20 +320,15 @@ def _box_overlap_ratio_cols(bounds):
 # because missing rounds only UNDER-suppress the oracle while the engine
 # raises on its own non-convergence).
 
-def _measure_duck(criterion: str, bounds) -> str:
-    """Box measure SQL mirroring the Spark expression tree term-for-term."""
+def _box_areas_duck(bounds) -> tuple[str, str, str]:
+    """(inter, area_a, area_b) box SQL mirroring overlap.box_areas
+    term-for-term: iw/ih are clamped AFTER the subtractions."""
     x0, y0, x1, y1 = bounds
     iw = f"GREATEST(LEAST(a.{x1}, b.{x1}) - GREATEST(a.{x0}, b.{x0}), 0e0)"
     ih = f"GREATEST(LEAST(a.{y1}, b.{y1}) - GREATEST(a.{y0}, b.{y0}), 0e0)"
     area_a = f"(a.{x1} - a.{x0}) * (a.{y1} - a.{y0})"
     area_b = f"(b.{x1} - b.{x0}) * (b.{y1} - b.{y0})"
-    if criterion == "iou":
-        # box_iou_cols clamps iw/ih AFTER the subtraction products
-        iw_r = f"LEAST(a.{x1}, b.{x1}) - GREATEST(a.{x0}, b.{x0})"
-        ih_r = f"LEAST(a.{y1}, b.{y1}) - GREATEST(a.{y0}, b.{y0})"
-        inter = f"GREATEST({iw_r}, 0e0) * GREATEST({ih_r}, 0e0)"
-        return f"({inter}) / ({area_a} + {area_b} - ({inter}))"
-    return f"({iw} * {ih}) / GREATEST({area_a}, {area_b})"
+    return f"{iw} * {ih}", area_a, area_b
 
 
 def nms_fixpoint_rounds_sql(conflicts_cte: str, rounds: int) -> str:
@@ -413,12 +356,12 @@ def greedy_nms_box_oracle_sql(
     score_col: str,
     threshold: float,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    criterion: str = "overlap_ratio",
     rounds: int = 24,
 ) -> str:
     """DuckDB twin of greedy_nms over BOX geometry: (id, selected)."""
     x0, y0, x1, y1 = bounds
-    measure = _measure_duck(criterion, bounds)
+    inter, area_a, area_b = _box_areas_duck(bounds)
+    measure = f"({inter}) / GREATEST({area_a}, {area_b})"
     a_wins = (
         f"(a.{score_col} > b.{score_col} OR "
         f"(a.{score_col} = b.{score_col} AND a.{id_col} < b.{id_col}))"
@@ -445,12 +388,12 @@ def weighted_nms_box_oracle_sql(
     priority_col: str,
     threshold: float,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    criterion: str = "iou",
     rounds: int = 24,
 ) -> str:
     """DuckDB twin of weighted_nms: quantized penalty, then the fixpoint."""
     x0, y0, x1, y1 = bounds
-    measure = _measure_duck(criterion, bounds)
+    inter, area_a, area_b = _box_areas_duck(bounds)
+    measure = f"({inter}) / ({area_a} + {area_b} - ({inter}))"
     score = f"{priority_col} - CAST(COALESCE(pen.pen_micro, 0) AS DOUBLE) / 1e6"
     a_wins = "(a.wscore > b.wscore OR (a.wscore = b.wscore AND a.{i} < b.{i}))".format(
         i=id_col

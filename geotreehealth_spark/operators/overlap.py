@@ -82,23 +82,26 @@ def overlap_selfjoin(
     return joined.drop("__cell", "__gx", "__gy")
 
 
+def box_areas(
+    prefix_a: str = "a_", prefix_b: str = "b_",
+    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
+):
+    """(intersection area, area a, area b) of two axis-aligned boxes as pure
+    Catalyst expressions; the intersection's width and height are clamped
+    at 0 after the subtraction."""
+    x0, y0, x1, y1 = bounds
+    a = {c: F.col(f"{prefix_a}{c}") for c in bounds}
+    b = {c: F.col(f"{prefix_b}{c}") for c in bounds}
+    iw = F.least(a[x1], b[x1]) - F.greatest(a[x0], b[x0])
+    ih = F.least(a[y1], b[y1]) - F.greatest(a[y0], b[y0])
+    inter = F.greatest(iw, F.lit(0.0)) * F.greatest(ih, F.lit(0.0))
+    return inter, (a[x1] - a[x0]) * (a[y1] - a[y0]), (b[x1] - b[x0]) * (b[y1] - b[y0])
+
+
 def box_iou_cols(
     prefix_a: str = "a_", prefix_b: str = "b_",
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
 ):
     """IoU of two axis-aligned boxes as a pure Catalyst expression."""
-    x0, y0, x1, y1 = bounds
-    iw = F.least(F.col(f"{prefix_a}{x1}"), F.col(f"{prefix_b}{x1}")) - F.greatest(
-        F.col(f"{prefix_a}{x0}"), F.col(f"{prefix_b}{x0}")
-    )
-    ih = F.least(F.col(f"{prefix_a}{y1}"), F.col(f"{prefix_b}{y1}")) - F.greatest(
-        F.col(f"{prefix_a}{y0}"), F.col(f"{prefix_b}{y0}")
-    )
-    inter = F.greatest(iw, F.lit(0.0)) * F.greatest(ih, F.lit(0.0))
-    area_a = (F.col(f"{prefix_a}{x1}") - F.col(f"{prefix_a}{x0}")) * (
-        F.col(f"{prefix_a}{y1}") - F.col(f"{prefix_a}{y0}")
-    )
-    area_b = (F.col(f"{prefix_b}{x1}") - F.col(f"{prefix_b}{x0}")) * (
-        F.col(f"{prefix_b}{y1}") - F.col(f"{prefix_b}{y0}")
-    )
+    inter, area_a, area_b = box_areas(prefix_a, prefix_b, bounds)
     return inter / (area_a + area_b - inter)

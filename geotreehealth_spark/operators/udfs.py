@@ -11,7 +11,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, BooleanType, DoubleType
+from pyspark.sql.types import BooleanType, DoubleType
 
 from geotreehealth_spark.geo import kernels, wkb
 
@@ -43,14 +43,6 @@ def _decode_cached(series: pd.Series) -> list:
 
 
 @pandas_udf(DoubleType())
-def iou_udf(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
-    """Pairwise polygon IoU (batch_sam.py:150-151 calculate_overlap)."""
-    ra = _decode_cached(wkb_a)
-    rb = _decode_cached(wkb_b)
-    return pd.Series([kernels.polygon_iou(a, b) for a, b in zip(ra, rb)])
-
-
-@pandas_udf(DoubleType())
 def overlap_ratio_udf(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
     """inter / max(areaA, areaB) — greedy-NMS criterion (get_polygons.py:806-816)."""
     ra = _decode_cached(wkb_a)
@@ -58,22 +50,6 @@ def overlap_ratio_udf(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
     return pd.Series([kernels.polygon_overlap_ratio(a, b) for a, b in zip(ra, rb)])
 
 
-@pandas_udf(BinaryType())
-def point_wkb_udf(x: pd.Series, y: pd.Series) -> pd.Series:
-    return pd.Series(wkb.encode_points(x.to_numpy(), y.to_numpy()))
-
-
 @pandas_udf(DoubleType())
 def polygon_area_udf(geom_wkb: pd.Series) -> pd.Series:
     return pd.Series([kernels.polygon_area(wkb.decode_polygon(w)) for w in geom_wkb])
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def polygon_centroid_udf(geom_wkb: pd.Series) -> pd.Series:
-    return pd.Series([list(kernels.polygon_centroid(wkb.decode_polygon(w))) for w in geom_wkb])
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def polygon_bounds_udf(geom_wkb: pd.Series) -> pd.Series:
-    xmin, ymin, xmax, ymax = wkb.polygon_bounds(list(geom_wkb))
-    return pd.Series(np.stack([xmin, ymin, xmax, ymax], axis=1).tolist())

@@ -85,6 +85,44 @@ def shingles_df(
     )
 
 
+def _set_jaccard_pairs(
+    elems: DataFrame, elem_col: str, threshold: float, id_col: str, max_df: int | None
+) -> DataFrame:
+    """Pairs (id_a < id_b, jaccard) with set Jaccard >= threshold over the
+    distinct (id, element) rows `elems` — the inverted-index plan: element
+    posting lists drive a self-join on the element, |A∩B| is a count per
+    pair, |A| and |B| come from one per-id count. max_df drops elements in
+    more than max_df ids first, and the sizes are taken after that filter
+    (the SQL oracles mirror this)."""
+    if max_df is not None:
+        hot = elems.groupBy(elem_col).count().where(F.col("count") > max_df).select(elem_col)
+        elems = elems.join(F.broadcast(hot), elem_col, "left_anti")
+    # r6: persist — sizes + both inverted-index join sides otherwise re-run
+    # the tokenize/shingle + distinct shuffle three times (no cross-join
+    # exchange reuse; see plans/r06/jaccard_pairs_before.txt); released by
+    # the session-level cache sweep, like other operators
+    elems = elems.persist()
+    sizes = elems.groupBy(id_col).agg(F.count("*").alias("__sz"))
+    a = elems.select(F.col(id_col).alias("id_a"), elem_col)
+    b = elems.select(F.col(id_col).alias("id_b"), elem_col)
+    inter = (
+        a.join(b, elem_col)
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("__inter"))
+    )
+    out = (
+        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sa"), "id_a")
+        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__sb"), "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("__inter") / (F.col("__sa") + F.col("__sb") - F.col("__inter")),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+    return out.select("id_a", "id_b", "jaccard")
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 4,
@@ -96,41 +134,11 @@ def ngram_jaccard_pairs(
     """Pairs (id_a < id_b, jaccard) with character-n-gram-set Jaccard >=
     threshold — the shingle-level near-dup detector (robust to tokenization
     differences, the standard n-gram variant of jaccard_pairs). Same
-    inverted-index plan: shingle posting lists drive a bucketed self-join,
-    max_df caps stop-shingles, Jaccard computed over the post-filter shingle
-    universe (mirrored by the SQL oracle)."""
-    sh = shingles_df(docs, n, id_col, text_col)
-    if max_df is not None:
-        hot = sh.groupBy("shingle").count().where(F.col("count") > max_df).select("shingle")
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    # r6: the shingle table feeds three consumers (sizes, both join sides) and
-    # was recomputed per consumer — shingling + distinct-shuffle x3; persist
-    # once (released by the session-level cache sweep, like other operators)
-    sh = sh.persist()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__inter"))
-    )
-    return (
-        inter.join(
-            sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sa"),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__sb"),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("__inter") / (F.col("__sa") + F.col("__sb") - F.col("__inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    inverted-index plan over shingles; max_df caps stop-shingles, Jaccard
+    computed over the post-filter shingle universe (mirrored by the SQL
+    oracle)."""
+    return _set_jaccard_pairs(
+        shingles_df(docs, n, id_col, text_col), "shingle", threshold, id_col, max_df
     )
 
 
@@ -158,33 +166,7 @@ def jaccard_pairs(
     intersections both post-filter), which is the semantics the oracle in
     __spark_entry__ mirrors.
     """
-    toks = tokens_df(docs, id_col, text_col)
-    if max_df is not None:
-        hot = toks.groupBy("token").count().where(F.col("count") > max_df).select("token")
-        toks = toks.join(F.broadcast(hot), "token", "left_anti")
-    # r6: persist — sizes + both inverted-index join sides otherwise re-run
-    # the tokenize + distinct shuffle three times (no cross-join exchange
-    # reuse; see plans/r06/jaccard_pairs_before.txt)
-    toks = toks.persist()
-    sizes = toks.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    a = toks.select(F.col(id_col).alias("id_a"), "token")
-    b = toks.select(F.col(id_col).alias("id_b"), "token")
-    inter = (
-        a.join(b, "token")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sa"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__sb"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("__inter") / (F.col("__sa") + F.col("__sb") - F.col("__inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select("id_a", "id_b", "jaccard")
+    return _set_jaccard_pairs(tokens_df(docs, id_col, text_col), "token", threshold, id_col, max_df)
 
 
 def _perm_params(n_perm: int) -> tuple[np.ndarray, np.ndarray]:

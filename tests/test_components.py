@@ -3,6 +3,7 @@ must produce the exact transitive closure with min-id canonical labels."""
 
 import pytest
 
+from geotreehealth_spark.operators import components
 from geotreehealth_spark.operators.components import connected_components
 
 
@@ -38,7 +39,12 @@ def test_long_chain_converges(spark):
     assert len(got) == 13
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch, persistent_rdds):
+    # the raise must also release the edge-list and label checkpoints
+    monkeypatch.setattr(components, "MAX_ITERS", 1)
     edges = spark.createDataFrame([(i, i + 1) for i in range(12)], "id_a long, id_b long")
+    before = persistent_rdds()
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iters=1)
+        connected_components(edges)
+    after = persistent_rdds()
+    assert after == before, f"leaked persistent RDDs after failure: {after - before}"

@@ -13,7 +13,7 @@ import random
 import numpy as np
 import pytest
 
-from geotreehealth_spark.operators import knn
+from geotreehealth_spark.operators import knn, materialize
 
 EXTENT = 100.0
 
@@ -90,13 +90,13 @@ def _count_rounds(monkeypatch):
     """Count the driver's checkpoints: one per round, so > 1 means a
     residue escalated."""
     calls = {"n": 0}
-    orig = knn._checkpoint_tracked
+    orig = materialize._checkpoint
 
-    def counting(df, sc):
+    def counting(df):
         calls["n"] += 1
-        return orig(df, sc)
+        return orig(df)
 
-    monkeypatch.setattr(knn, "_checkpoint_tracked", counting)
+    monkeypatch.setattr(materialize, "_checkpoint", counting)
     return calls
 
 
@@ -121,15 +121,15 @@ def test_quadrant_knn_join_empty_right(spark):
     assert "quadrant" in out.columns
 
 
-def test_knn_join_no_cache_leak(spark):
+def test_knn_join_no_cache_leak(spark, persistent_rdds):
     left = _points(spark, [(f"p{i}", float(i), float(i)) for i in range(50)])
     right = _cands(spark, [(f"c{i}", float(i) + 0.25, float(i) - 0.25) for i in range(50)])
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    before = len(persistent_rdds())
     out = knn.knn_join(
         left, right, k=3, left_id="pid", right_id="cid", cell_size=5.0, extent=60.0
     )
     assert out.count() == 50 * 3
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
+    after = len(persistent_rdds())
     # the returned localCheckpoint RDD is the only retained block set
     assert after <= before + 1
 
@@ -237,28 +237,27 @@ def _sparse_residue(spark):
     return left, right
 
 
-def test_escalation_failure_releases_checkpoints(spark, monkeypatch):
+def test_escalation_failure_releases_checkpoints(spark, monkeypatch, persistent_rdds):
     """A raise in the escalation round must release the first round's
     checkpoint blocks (unreachable through the DataFrame API) and the input
     caches, leaving the persistent-RDD registry as it was."""
     left, right = _sparse_residue(spark)
     calls = {"n": 0}
-    orig = knn._checkpoint_tracked
+    orig = materialize._checkpoint
 
-    def boom(df, sc):
+    def boom(df):
         calls["n"] += 1
         if calls["n"] >= 2:  # fail entering round 2: round-1 blocks exist
             raise RuntimeError("injected escalation failure")
-        return orig(df, sc)
+        return orig(df)
 
-    monkeypatch.setattr(knn, "_checkpoint_tracked", boom)
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
+    monkeypatch.setattr(materialize, "_checkpoint", boom)
+    before = persistent_rdds()
     with pytest.raises(RuntimeError, match="injected"):
         knn.knn_join(left, right, k=3, left_id="pid", right_id="cid",
                      cell_size=5.0, extent=100.0)
     assert calls["n"] == 2, "the residue never escalated"
-    after = set(jsc.getPersistentRDDs().keys())
+    after = persistent_rdds()
     assert after == before, f"leaked persistent RDDs after failure: {after - before}"
 
 

@@ -4,14 +4,22 @@ The operator cost-switches between a direct window-rank over the enumerated
 product and a hash-threshold prefilter + escalate-on-shortfall plan
 (matching.py random_k_sample). Both are defined to return the SAME rows —
 the k smallest draw hashes per probe, ties by right_id — so this forces each
-path on the same input and asserts byte-identical sorted output, including
-an oversample=1 run where ~half the probes fall short of k survivors in
-round 1 and the escalation loop actually executes.
+path on the same input (DIRECT_MAX_PAIRS set above or below |L|·|R|) and
+asserts byte-identical sorted output, including an OVERSAMPLE=1 run where
+~half the probes fall short of k survivors in round 1 and the escalation
+loop actually executes.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
-from geotreehealth_spark.operators import matching
+from geotreehealth_spark.operators import materialize, matching
+
+
+def _draw(monkeypatch, left, right, direct_max_pairs, oversample=matching.OVERSAMPLE, **kw):
+    monkeypatch.setattr(matching, "DIRECT_MAX_PAIRS", direct_max_pairs)
+    monkeypatch.setattr(matching, "OVERSAMPLE", oversample)
+    return _rows(matching.random_k_sample(left, right, **kw))
 
 
 def _inputs(spark):
@@ -30,24 +38,21 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_threshold_path_equals_direct(spark):
+def test_threshold_path_equals_direct(spark, monkeypatch):
     left, right = _inputs(spark)
     kw = dict(k=7, left_id="pid", right_id="cid", left_key="lkey",
               right_key="rkey")
-    direct = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=10**9, **kw))
+    direct = _draw(monkeypatch, left, right, 10**9, **kw)
     assert len(direct) == 60 * 7
-    thresh = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, **kw))
+    thresh = _draw(monkeypatch, left, right, 0, **kw)
     assert thresh == direct
-    # oversample=1: expected survivors per probe == k, so shortfall probes
+    # OVERSAMPLE=1: expected survivors per probe == k, so shortfall probes
     # exist with near-certainty and the escalation re-scan runs
-    tight = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, oversample=1, **kw))
+    tight = _draw(monkeypatch, left, right, 0, oversample=1, **kw)
     assert tight == direct
 
 
-def test_threshold_path_self_exclusion_and_small_pool(spark):
+def test_threshold_path_self_exclusion_and_small_pool(spark, monkeypatch):
     # candidate pool smaller than k: every probe returns all (non-self)
     # candidates, both paths
     left = spark.range(30).select(
@@ -61,10 +66,8 @@ def test_threshold_path_self_exclusion_and_small_pool(spark):
     )
     kw = dict(k=9, left_id="pid", right_id="cid", left_key="lkey",
               right_key="rkey", self_key="self_rk")
-    direct = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=10**9, **kw))
-    thresh = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, **kw))
+    direct = _draw(monkeypatch, left, right, 10**9, **kw)
+    thresh = _draw(monkeypatch, left, right, 0, **kw)
     assert thresh == direct
     # probes 0-3 exclude their self candidate (3 rows), probes 4+ get all 4
     per_probe = {}
@@ -74,14 +77,12 @@ def test_threshold_path_self_exclusion_and_small_pool(spark):
     assert len(per_probe) == 30
 
 
-def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
+def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch, persistent_rdds):
     # r6: a mid-escalation failure must sweep the per-round candidate
-    # checkpoint blocks (via the registry-diffed java RDD handles — the
+    # checkpoint blocks (via the JVM RDD under each checkpoint's plan — the
     # DataFrame-level unpersist is a no-op for localCheckpoint storage) AND
     # the input caches, leaving the session's persistent-RDD registry as it
     # was before the call.
-    from geotreehealth_spark.operators import components, matching
-
     left = spark.range(0, 50).selectExpr(
         "CAST(id AS STRING) AS pid", "id AS lkey"
     )
@@ -92,33 +93,31 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
         "CAST(id AS STRING) AS cid", "id * 2 AS rkey"
     )
     calls = {"n": 0}
-    orig = components._checkpoint_tracked
+    orig = materialize._checkpoint
 
-    def boom(df, sc):
+    def boom(df):
         calls["n"] += 1
         if calls["n"] >= 2:  # fail entering round 2: round-1 blocks exist
             raise RuntimeError("injected mid-loop failure")
-        return orig(df, sc)
+        return orig(df)
 
-    monkeypatch.setattr(components, "_checkpoint_tracked", boom)
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    import pytest
-
+    monkeypatch.setattr(materialize, "_checkpoint", boom)
+    # OVERSAMPLE=1 guarantees shortfall probes -> a second round
+    monkeypatch.setattr(matching, "DIRECT_MAX_PAIRS", 0)
+    monkeypatch.setattr(matching, "OVERSAMPLE", 1)
+    before = persistent_rdds()
     with pytest.raises(RuntimeError, match="injected"):
-        # oversample=1 guarantees shortfall probes -> a second round
         matching.random_k_sample(
             left, right, k=5, left_id="pid", right_id="cid",
             left_key="lkey", right_key="rkey",
-            direct_max_pairs=0, oversample=1,
         )
     assert calls["n"] >= 2, "escalation never reached a second round"
-    after = set(jsc.getPersistentRDDs().keys())
+    after = persistent_rdds()
     leaked = after - before
     assert not leaked, f"leaked persistent RDDs after failure: {leaked}"
 
 
-def test_threshold_path_bucketed_wraparound_and_nulls(spark):
+def test_threshold_path_bucketed_wraparound_and_nulls(spark, monkeypatch):
     # r6 bucketed admissible-window join: large scattered keys make the
     # per-probe window a = (48271*lk) mod p land anywhere in [0, p), so both
     # the [0, T-a) and the wraparound [p-a, p-a+T) interval arms are
@@ -137,12 +136,9 @@ def test_threshold_path_bucketed_wraparound_and_nulls(spark):
     )
     kw = dict(k=5, left_id="pid", right_id="cid", left_key="lkey",
               right_key="rkey")
-    direct = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=10**9, **kw))
+    direct = _draw(monkeypatch, left, right, 10**9, **kw)
     assert len(direct) == 49 * 5  # the NULL-key probe draws nothing
-    thresh = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, **kw))
+    thresh = _draw(monkeypatch, left, right, 0, **kw)
     assert thresh == direct
-    tight = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, oversample=1, **kw))
+    tight = _draw(monkeypatch, left, right, 0, oversample=1, **kw)
     assert tight == direct

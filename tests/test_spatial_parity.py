@@ -13,7 +13,7 @@ import pytest
 from geotreehealth_spark import synth
 from geotreehealth_spark.docs import generator
 from geotreehealth_spark.geo import kernels, wkb
-from geotreehealth_spark.operators import nms, pip_join
+from geotreehealth_spark.operators import materialize, nms, pip_join
 from tests.conftest import SF_DIR
 
 
@@ -120,8 +120,10 @@ def test_greedy_nms_parity(spark, crowns_geo_pd):
     assert n_suppressed > 50
 
 
-def test_greedy_nms_distributed_fixpoint_matches_driver_path(spark, crowns_geo_pd):
-    """driver_fixpoint_max=0 forces the join-based fixpoint; results must be
+def test_greedy_nms_distributed_fixpoint_matches_driver_path(
+    spark, crowns_geo_pd, monkeypatch
+):
+    """DRIVER_FIXPOINT_MAX=0 forces the join-based fixpoint; results must be
     identical to the driver-local numpy path (same subset as parity test)."""
     pdf = crowns_geo_pd[
         (crowns_geo_pd.gxmin < 60.0) & (crowns_geo_pd.gymin < 300.0)
@@ -133,14 +135,64 @@ def test_greedy_nms_distributed_fixpoint_matches_driver_path(spark, crowns_geo_p
         area_col="garea",
     )
     a = nms.greedy_nms(geo, **kwargs).select("crown_id", "selected").toPandas()
-    b = (
-        nms.greedy_nms(geo, driver_fixpoint_max=0, **kwargs)
-        .select("crown_id", "selected")
-        .toPandas()
-    )
+    monkeypatch.setattr(nms, "DRIVER_FIXPOINT_MAX", 0)
+    b = nms.greedy_nms(geo, **kwargs).select("crown_id", "selected").toPandas()
     ma = dict(zip(a.crown_id, a.selected))
     mb = dict(zip(b.crown_id, b.selected))
     assert ma == mb and len(ma) == len(pdf)
+
+
+def _chain_boxes(spark):
+    """Boxes b0..b4 in a row, each overlapping only its neighbours, scores
+    descending: b0 suppresses b1, which leaves b2 kept, which suppresses b3
+    — the distributed fixpoint needs two rounds."""
+    return spark.createDataFrame(
+        [(f"b{i}", float(10 - i), 6.0 * i, 0.0, 6.0 * i + 10.0, 10.0) for i in range(5)],
+        "crown_id string, score double, xmin double, ymin double, xmax double, ymax double",
+    )
+
+
+def test_greedy_nms_driver_path_releases_edge_checkpoint(spark, persistent_rdds):
+    """After a driver-path call the session holds exactly the polys cache,
+    which the returned plan reads: the edge checkpoint went with toPandas,
+    and releasing it kept the cache its job materialized first."""
+    polys = _chain_boxes(spark)
+    before = persistent_rdds()
+    out = nms.greedy_nms(polys, id_col="crown_id", score_col="score", threshold=0.3,
+                         cell_size=50.0)
+    assert {r.crown_id for r in out.where(~out.selected).collect()} == {"b1", "b3"}
+    grown = persistent_rdds() - before
+    polys.unpersist()
+    assert len(grown) == 1, f"expected only the polys cache, got {grown}"
+    assert persistent_rdds() == before, "the survivor is not the polys cache"
+
+
+def test_greedy_nms_distributed_failure_releases_checkpoints(spark, monkeypatch, persistent_rdds):
+    """A raise in round 2 of the distributed fixpoint releases every block
+    the call checkpointed. polys arrives persisted, as weighted_nms passes
+    it, so the registry holds only what the call itself creates."""
+    polys = _chain_boxes(spark).persist()
+    polys.count()
+    calls = {"n": 0}
+    orig = materialize._checkpoint
+
+    def boom(df):
+        # 1: edges, round 1: newly suppressed + live edges, 4: round 2
+        calls["n"] += 1
+        if calls["n"] >= 4:
+            raise RuntimeError("injected fixpoint failure")
+        return orig(df)
+
+    monkeypatch.setattr(materialize, "_checkpoint", boom)
+    monkeypatch.setattr(nms, "DRIVER_FIXPOINT_MAX", 0)
+    before = persistent_rdds()
+    with pytest.raises(RuntimeError, match="injected"):
+        nms.greedy_nms(polys, id_col="crown_id", score_col="score", threshold=0.3,
+                       cell_size=50.0)
+    assert calls["n"] == 4, "the fixpoint never reached round 2"
+    after = persistent_rdds()
+    polys.unpersist()
+    assert after == before, f"leaked persistent RDDs after failure: {after - before}"
 
 
 def sequential_weighted_nms(pdf, threshold):
@@ -188,7 +240,7 @@ def test_weighted_nms_parity(spark):
     got = (
         nms.weighted_nms(
             polys, id_col="crown_id", priority_col="priority", threshold=0.5,
-            cell_size=10.0, criterion="iou",
+            cell_size=10.0,
         )
         .select("crown_id", "wscore", "selected")
         .toPandas()
